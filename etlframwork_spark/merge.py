@@ -11,30 +11,23 @@ sorted-merge apply)" as a copy-on-write merge into the bucketed
 3.  one bucket-granular pass over the batch collects affected buckets +
     per-bucket source offset ranges (drives manifest-level pruning);
 4.  union the batch with ONLY the affected buckets' stored rows and take
-    the last writer per key — two interchangeable, test-proven-equal
-    resolution strategies:
+    the last writer per key (``lww.resolve``: the engine's one LWW rule,
+    ordered by (lsn, commit, delete-beats-live)). ``resolve`` picks how:
 
-    * ``maxby`` (scale default): ``groupBy(key).agg(max_by(row,
-      (lsn, commit)))``. Catalyst plans partial_max_by before the shuffle,
-      so a hot key is pre-reduced map-side on every input partition —
-      skew defuses for free and everything stays in whole-stage codegen.
-    * ``sorted_merge``: the north-rule's literal per-key sorted-merge
-      apply — a salted ``max_by`` pre-reduce (explicit skew salt,
-      BJ:6 "salted repartitioning on hot repos") caps group sizes, then
-      ``applyInPandas`` folds each key's events in (lsn, commit) order.
-      Vectorized Arrow transfer; no per-row Python outside the fold.
+    * ``maxby`` (default): a ``max_by`` aggregate of the row per key.
+      Catalyst plans partial_max_by before the shuffle, so a hot key is
+      pre-reduced map-side on every input partition — skew defuses for
+      free and everything stays in whole-stage codegen.
     * ``raw`` (merge-on-read only): no batch dedup at all — every
       validated event lands as a delta row and the read/compaction LWW
       resolves winners. One payload shuffle per epoch (the bucket-aligned
-      write) instead of two; measured ~equal to ``maxby`` on the bench
-      workload (~3 events/key/epoch) and strictly better for insert-heavy
-      streams; costs larger delta files under heavy per-key churn.
+      write) instead of two; best for insert-heavy streams; costs larger
+      delta files under heavy per-key churn.
 
-    LWW is associative/commutative over the total order (lsn, commit) —
-    commit ids are unique per event — so both strategies and any salting
-    produce the identical final row; ties (event re-delivery) are exact
-    duplicates and collapse. A late LOWER-lsn event never clobbers: the
-    stored row participates in the same max with its stored lsn.
+    LWW is associative/commutative over the total order, so deferring the
+    resolve to read time changes nothing; ties (event re-delivery) are
+    exact duplicates and collapse. A late LOWER-lsn event never clobbers:
+    the stored row participates in the same max with its stored lsn.
 5.  winners that are deletes drop the row; survivors are rewritten into
     the affected buckets (zstd parquet, ``_bucket=K`` layout); unaffected
     buckets carry forward by reference;
@@ -49,9 +42,9 @@ partitioned write (round 3; previously a dedicated stats job added a
 second full scan + a collect barrier per epoch). Copy-on-write keeps the
 pre-pass because it must know the affected buckets before reading their
 stored rows. The target table is never scanned beyond affected buckets;
-all logic is JVM-side except the optional sorted-merge fold; the write
-routes each bucket wholly to one task (4x-spread hash partitioning —
-see step 5) with ``partitionBy`` splitting bucket directories.
+all logic is JVM-side; the write routes each bucket wholly to one task
+(4x-spread hash partitioning — see step 5) with ``partitionBy`` splitting
+bucket directories.
 """
 
 from __future__ import annotations
@@ -60,29 +53,21 @@ import os
 import time
 from typing import Any, Callable
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from . import lww
 from .lineage import MetricsTable, shuffle_totals
 from .table import BUCKET_COL, TOMBSTONE_COL, SnapshotTable, bucket_expr
 
 VALID_OPS = ("insert", "update", "delete")
+# the only accepted ``resolve`` / ``write_mode`` values (IngestJob checks
+# its config against the same tuples before the stream starts)
+RESOLVES = ("maxby", "raw")
+WRITE_MODES = ("cow", "mor")
 _STORED = "__stored__"
 SHA_COL = "content_sha256"
-# Deterministic LWW tie-break (round-6, advice item #1): at an IDENTICAL
-# (lsn, commit) ordering key, a delete/tombstone beats a live row. Ties
-# between NON-identical rows arise only from out-of-band corrections that
-# stamp a tombstone at the victim's own order (delete_where) — and then
-# again downstream when read_changes propagates that delete into a table
-# holding the identical live row. Without a tie-break, max_by's winner is
-# partition/merge-order dependent: a re-delivered original event could
-# resurrect a deleted key, and a propagated delete could silently fail to
-# apply. The priority column is appended LAST in the order struct, so it
-# only ever decides exact (lsn, commit) ties.
-_LWW_PRI = "_lww_pri"
 
 
 def _list_written_files(data_dir: str) -> dict[int, list[str]]:
@@ -131,106 +116,6 @@ def _align(df: DataFrame, schema: StructType, extra: list[str]) -> DataFrame:
     return df.select(*cols, *[F.col(c) for c in extra])
 
 
-def _resolve_maxby(
-    unioned: DataFrame, key_cols: list[str], all_cols: list[str], order_cols: list[str]
-) -> DataFrame:
-    """LWW via max_by — partial aggregation map-side (skew-proof, codegen)."""
-    winner = F.max_by(
-        F.struct(*[F.col(c) for c in all_cols]),
-        F.struct(*[F.col(c) for c in order_cols]),
-    ).alias("_w")
-    return unioned.groupBy(*key_cols).agg(winner).select("_w.*")
-
-
-# Winner-set size above which _resolve_two_phase abandons the broadcast
-# semi join and falls back to maxby: broadcasting ~120B/winner, 2M rows is
-# ~240MB on the driver AND every executor — past that the "minimal payload
-# movement" trade inverts into an OOM risk. LWW associativity makes the
-# fallback state-identical (tests/test_merge.py pins the digest).
-TWO_PHASE_MAX_BROADCAST_ROWS = 2_000_000
-
-
-def _resolve_two_phase(
-    unioned: DataFrame,
-    key_cols: list[str],
-    all_cols: list[str],
-    order_cols: list[str],
-    max_broadcast_rows: int | None = None,
-) -> DataFrame:
-    """LWW with minimal payload movement — the large-row scale path.
-
-    ``maxby`` shuffles every full row (large ``content``) into the
-    group-by exchange. Here the winner per key is chosen on a SLIM
-    projection (keys + order columns, ~50B/row — column pruning means the
-    underlying scans don't even read content), then the full rows are
-    fetched back with a null-safe LEFT SEMI join on (key, order). Payload
-    bytes cross a shuffle only for WINNER rows (post-dedup), which at
-    CDC update ratios is a small fraction of the raw batch.
-
-    Exact re-deliveries (same key+lsn+commit as a stored row or a
-    duplicate event) tie in the semi join; the rows are state-identical
-    by construction, so ``dropDuplicates(key)`` resolves the tie without
-    affecting the final state.
-    """
-    if max_broadcast_rows is None:
-        max_broadcast_rows = TWO_PHASE_MAX_BROADCAST_ROWS
-    slim = unioned.select(*key_cols, *order_cols)
-    winner = F.max(F.struct(*[F.col(c) for c in order_cols])).alias("_w")
-    winners = slim.groupBy(*key_cols).agg(winner).select(*key_cols, "_w.*")
-    # Materialize the slim winner set once (localCheckpoint) so the size
-    # check and the subsequent broadcast share one computation, then GUARD
-    # the broadcast: round-2 review — an unconditionally forced broadcast
-    # on a very large epoch OOMs the driver instead of degrading. Past the
-    # threshold, fall back to maxby (state-identical by LWW associativity).
-    w = winners.select(
-        *[F.col(c).alias(f"_win_{c}") for c in key_cols + order_cols]
-    ).localCheckpoint(eager=True)
-    if w.count() > max_broadcast_rows:
-        return _resolve_maxby(unioned, key_cols, all_cols, order_cols)
-    cond = None
-    for c in key_cols + order_cols:
-        e = F.col(c).eqNullSafe(F.col(f"_win_{c}"))
-        cond = e if cond is None else cond & e
-    # broadcast is forced below the guard: a sort-merge semi join would
-    # shuffle the full payload rows on the join keys, defeating the point.
-    fetched = unioned.join(F.broadcast(w), cond, "left_semi")
-    return fetched.dropDuplicates(key_cols)
-
-
-def _resolve_sorted_merge(
-    unioned: DataFrame,
-    key_cols: list[str],
-    all_cols: list[str],
-    order_cols: list[str],
-    num_salts: int,
-) -> DataFrame:
-    """North-rule-literal per-key sorted-merge apply (applyInPandas).
-
-    Stage 1 — salted pre-reduce: ``groupBy(key, salt)`` with max_by caps
-    any hot key at ``num_salts`` surviving rows before the per-key stage
-    (explicit skew handling; LWW associativity makes this lossless).
-    Stage 2 — ``applyInPandas`` folds each key's rows in (lsn, tiebreak)
-    order: the last writer wins whole-row.
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(num_salts)).alias("_salt")
-    winner = F.max_by(
-        F.struct(*[F.col(c) for c in all_cols]),
-        F.struct(*[F.col(c) for c in order_cols]),
-    ).alias("_w")
-    pre = unioned.groupBy(*key_cols, salt).agg(winner).select("_w.*")
-
-    out_schema = StructType([pre.schema[c] for c in all_cols])
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        # na_position='first' matches Spark struct ordering (nulls sort
-        # FIRST ascending), so all three resolve strategies agree on the
-        # winner even if an order column is ever null on one side.
-        pdf = pdf.sort_values(order_cols, kind="stable", na_position="first")
-        return pdf.iloc[[-1]]
-
-    return pre.groupBy(*key_cols).applyInPandas(fold, schema=out_schema)
-
-
 def merge_batch(
     spark: SparkSession,
     table: SnapshotTable,
@@ -240,7 +125,6 @@ def merge_batch(
     epoch_id: int = 0,
     metrics: MetricsTable | None = None,
     resolve: str = "maxby",
-    num_salts: int = 16,
     quarantine_dir: str | None = None,
     write_mode: str = "cow",
     fault_injector: Callable[[str], None] | None = None,
@@ -263,8 +147,10 @@ def merge_batch(
     Returns a summary dict; ``{"skipped": True}`` when the epoch fence was
     already committed (idempotent re-delivery, BJ:6).
     """
-    if write_mode not in ("cow", "mor"):
-        raise ValueError(f"unknown write_mode {write_mode!r}")
+    if write_mode not in WRITE_MODES:
+        raise ValueError(f"unknown write_mode {write_mode!r}; one of {WRITE_MODES}")
+    if resolve not in RESOLVES:
+        raise ValueError(f"unknown resolve strategy {resolve!r}; one of {RESOLVES}")
     if resolve == "raw" and write_mode != "mor":
         raise ValueError("resolve='raw' (no batch dedup) requires write_mode='mor'")
     t0 = time.monotonic()
@@ -311,24 +197,22 @@ def merge_batch(
 
     # -- 3. batch stats: affected buckets + offset ranges -------------------
     # Two execution shapes (identical outputs):
-    #   * cow / two_phase: a dedicated stats pass BEFORE the resolve — cow
-    #     must know the affected buckets to read only their stored rows,
-    #     and two_phase's plan traverses the batch twice (an observe node
-    #     there would double-count).
-    #   * mor single-pass (the ingest hot path): NO extra job. Stats ride
-    #     the resolve+write action itself via Observation, and the
+    #   * cow: a dedicated stats pass BEFORE the resolve — cow must know
+    #     the affected buckets to read only their stored rows.
+    #   * mor (the ingest hot path): NO extra job. Stats ride the
+    #     resolve+write action itself via Observation, and the
     #     affected-bucket list falls out of the partitioned write's
     #     directory layout. One scan of the batch per epoch instead of
     #     two (measured round 3: the stats pass was ~15% of epoch wall
     #     and scaled worst, being a short-task barrier).
     t_stats0 = time.monotonic()
     nb = table.num_buckets
-    single_pass = write_mode == "mor" and resolve != "two_phase"
+    mor = write_mode == "mor"
     obs = None
     affected: list[int] | None = None
     n_events = n_deletes = 0
     src_lo = src_hi = None
-    if not single_pass:
+    if not mor:
         bstats = (
             ev.groupBy(bucket_expr(key_cols, nb).alias(BUCKET_COL))
             .agg(
@@ -352,7 +236,7 @@ def merge_batch(
         "new_columns": new_cols,
     }
 
-    if not single_pass:
+    if not mor:
         summary.update(events=n_events, deletes=n_deletes, affected_buckets=len(affected))
         if n_events == 0:
             # still commit the fence so re-delivery of an empty epoch is a no-op
@@ -372,7 +256,7 @@ def merge_batch(
     # (including tombstones) are resolved at READ time by the table's
     # merge-on-read LWW (table.read), which is the same associative max.
     ev_aligned = _align(ev, schema, ["op"]).select(*all_cols, "op")
-    if single_pass:
+    if mor:
         from pyspark.sql import Observation
 
         obs = Observation(f"epoch_stats_{fence}")
@@ -383,7 +267,7 @@ def merge_batch(
             F.max(order_col).alias("hi"),
             F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("dels"),
         )
-    if write_mode == "mor":
+    if mor:
         unioned = ev_aligned
     else:
         # read-planning bucket (round-6 verdict #2): driver-side cost of
@@ -412,18 +296,9 @@ def merge_batch(
         unioned = ev_aligned.unionByName(stored_aligned)
         timings["read_plan"] = round(time.monotonic() - t_rp0, 3)
 
-    # deterministic total order: (lsn, commit) — commit is unique per event;
-    # tables without a commit column fall back to lsn alone (SURVEY §7.4.3).
-    # _LWW_PRI is appended as the FINAL order component: delete beats live
-    # at an exact (lsn, commit) tie (see the constant's comment).
-    order_cols = [table.order_col] + (["commit"] if "commit" in all_cols else [])
-    if resolve != "raw":
-        del_flag = (F.col("op") == "delete") | (
-            (F.col("op") == _STORED) & F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-        )
-        unioned = unioned.withColumn(_LWW_PRI, del_flag.cast("int"))
-    carry_cols = all_cols + ["op", _LWW_PRI]
-    resolve_order = order_cols + [_LWW_PRI]
+    is_del = (F.col("op") == "delete") | (
+        (F.col("op") == _STORED) & F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
+    )
     if resolve == "raw":
         # merge-on-read fast path with NO batch dedup: every validated event
         # becomes a delta row (deletes as tombstones) and read/compaction's
@@ -433,20 +308,9 @@ def merge_batch(
         # exactly ONE exchange per epoch (the bucket-aligned write
         # distribution). Best for insert-heavy / low-duplication streams.
         resolved = ev_aligned
-    elif resolve == "maxby":
-        resolved = _resolve_maxby(unioned, key_cols, carry_cols, resolve_order).drop(_LWW_PRI)
-    elif resolve == "two_phase":
-        resolved = _resolve_two_phase(unioned, key_cols, carry_cols, resolve_order).drop(_LWW_PRI)
-    elif resolve == "sorted_merge":
-        resolved = _resolve_sorted_merge(
-            unioned, key_cols, carry_cols, resolve_order, num_salts
-        ).drop(_LWW_PRI)
     else:
-        raise ValueError(f"unknown resolve strategy {resolve!r}")
+        resolved = lww.resolve(unioned, key_cols, order_col, deleted=is_del)
 
-    is_del = (F.col("op") == "delete") | (
-        (F.col("op") == _STORED) & F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-    )
     # winners: stored rows keep their sha; winning deletes become tombstones
     # (payload nulled — only key + lsn are retained); new upserts get
     # sha2(content) computed JVM-side.
@@ -464,9 +328,8 @@ def merge_batch(
     # tiebreak): nulling 'commit' would let a future distinct event with the
     # same lsn and any non-null commit beat the tombstone and resurrect the
     # key, contradicting the (lsn, commit) total order.
-    payload_cols = [
-        c for c in all_cols if c not in (*key_cols, *order_cols, TOMBSTONE_COL, SHA_COL)
-    ]
+    keep = {*key_cols, *lww.order_cols(order_col, all_cols), TOMBSTONE_COL, SHA_COL}
+    payload_cols = [c for c in all_cols if c not in keep]
     for c in payload_cols:
         f = schema[c]
         final = final.withColumn(c, F.when(is_del, F.lit(None).cast(f.dataType)).otherwise(F.col(c)))
@@ -488,7 +351,7 @@ def merge_batch(
     hook("pre_write")
     t_w0 = time.monotonic()
     data_dir = table.new_data_dir()
-    n_parts = 4 * nb if single_pass else max(4 * len(affected), 1)
+    n_parts = 4 * nb if mor else max(4 * len(affected), 1)
     (
         final.repartition(n_parts, F.col(BUCKET_COL))
         .write.partitionBy(BUCKET_COL)
@@ -497,7 +360,7 @@ def merge_batch(
     )
     timings["resolve_write"] = round(time.monotonic() - t_w0, 2)
     files_by_bucket = _list_written_files(data_dir)
-    if single_pass:
+    if mor:
         # stats observed during the write action; affected buckets from
         # the partitioned directory layout — no separate stats job ran.
         # Zero written files <=> zero validated events (every event yields
@@ -536,7 +399,7 @@ def merge_batch(
         fence=fence,
         new_schema=schema if new_cols else None,
         summary={**summary, "operation": f"merge_{write_mode}", "timings": timings},
-        mode="append_delta" if write_mode == "mor" else "replace",
+        mode="append_delta" if mor else "replace",
         validate_from_snapshot=read_snapshot,
         branch=branch,
     )
@@ -668,8 +531,7 @@ def _delete_once(spark, table, pred, filters) -> dict:
 
     schema = table.schema()
     all_cols = schema.fieldNames()
-    order_cols = [table.order_col] + (["commit"] if "commit" in all_cols else [])
-    keep_cols = set(table.key_cols) | set(order_cols) | {TOMBSTONE_COL}
+    keep_cols = {*table.key_cols, *lww.order_cols(table.order_col, all_cols), TOMBSTONE_COL}
     # live row AND matches the predicate -> tombstone with nulled payload.
     # Materialize the flag BEFORE touching TOMBSTONE_COL: the expression
     # references _deleted, which the tombstone withColumn replaces.

@@ -1,7 +1,6 @@
 """DataSource V2 exposure of ``SnapshotTable`` (Spark 4 Python Data
-Source API) — closes round-2's "largest remaining architectural gap":
-manifest-level pruning was Python-side only, invisible to Catalyst, so
-``spark.sql`` over the CDC table could not prune.
+Source API), so ``spark.sql`` over the CDC table gets Catalyst-visible
+pruning.
 
 Registration + use::
 
@@ -10,35 +9,31 @@ Registration + use::
     df = spark.read.format("snapshot_table").option("root", root).load()
     df.filter((df.repo == "org1/repo17") & (df.path == "src/mod0/f3.js"))
 
-What Catalyst sees:
+The reader and writer are thin Arrow renderings over
+``SnapshotTable.load(root)``; every table decision is the table's own:
 
-- **Key-equality bucket pruning** via ``pushFilters``: equality filters
-  on ALL key columns let the reader compute the row's bucket with a
-  pure-Python reimplementation of Spark's ``xxhash64`` (bit-equality vs
-  the JVM pinned in tests/test_datasource.py) and plan exactly ONE input
-  partition instead of ``num_buckets``. Every filter is still returned to
-  Spark for post-scan evaluation, so pruning can never change results.
-- **Snapshot time travel** via ``option("snapshot_id", N)``.
-- **Merge-on-read semantics**: each partition = one bucket; delta files
-  are LWW-resolved against the base inside the partition (same
-  associative (lsn, commit) max the writer and ``table.read`` use), and
-  tombstones are dropped — byte-identical rows to ``SnapshotTable.read``.
+- **Snapshot and schema** (``SnapshotTable.pin``): ``option("snapshot_id",
+  N)`` or ``option("tag", name)`` reads that snapshot under its own
+  schema, exactly as ``table.read(snapshot_id=..)`` / ``(tag=..)``.
+- **Pruning** (``SnapshotTable.plan_scan``): pushed filters pin the
+  bucket when they fix every (string) key column — the pure-Python
+  ``xxhash64`` below is bit-equal to the JVM (pinned in
+  tests/test_datasource.py) — and skip clean-bucket files by their
+  min/max bounds. One input partition per bucket. Every filter is still
+  returned to Spark, so pruning can never change results.
+- **Merge-on-read** (``lww.resolve_arrow``): delta-carrying buckets are
+  LWW-resolved against their base inside the partition in Arrow, with
+  column types untouched; tombstones are dropped — row-identical to
+  ``SnapshotTable.read``.
 
-Scale/fit notes, stated honestly: rows cross the Python worker as Arrow
-record batches, so this reader costs an Arrow hop that the native
-``table.read`` path (pure JVM parquet scan) does not. It is the SQL
-convenience/interop surface — ad-hoc ``spark.sql`` over CDC tables with
-pruning — not the ingest hot path, which stays on ``table.read``. A JVM
-DSv2 implementation would remove the hop; the PLANNING behavior
-(partition-per-bucket, filter-driven pruning, snapshot pinning) is
-exactly what that implementation would do.
+Scale/fit: rows cross the Python worker as Arrow record batches, a hop
+the native ``table.read`` path (pure JVM parquet scan) does not pay. This
+is the SQL convenience/interop surface, not the ingest hot path.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import re
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -55,6 +50,9 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructField, StructType
+
+from .. import lww
+from ..table import TOMBSTONE_COL, SnapshotTable
 
 # ------------------------------------------------------------- xxhash64
 # Pure-Python XXH64 matching Spark's `xxhash64` on strings (UTF-8 bytes,
@@ -245,72 +243,6 @@ def buckets_np(key_arrays: list, num_buckets: int) -> "_np.ndarray":
 
 
 # ----------------------------------------------------------- the source
-_VERSION_RE = re.compile(r"^v(\d+)\.json$")
-
-
-def _load_meta(root: str) -> dict:
-    mdir = os.path.join(root, "metadata")
-    versions = [
-        int(m.group(1)) for f in os.listdir(mdir) if (m := _VERSION_RE.match(f))
-    ]
-    if not versions:
-        raise FileNotFoundError(f"no table metadata under {mdir}")
-    with open(os.path.join(mdir, f"v{max(versions)}.json")) as f:
-        meta = json.load(f)
-    # round-6 manifest sharding: inflate per-snapshot shard pointers into
-    # the in-memory file lists this module plans against (driver-side
-    # only — executors receive pre-resolved file lists in partitions)
-    from ..table import hydrate_meta
-
-    return hydrate_meta(root, meta)
-
-
-def _resolve_snapshot_schema(meta: dict, options: dict) -> tuple[int, dict, dict, int]:
-    """Resolve (snapshot_id, snapshot, schema_struct_json, schema_id) for a read.
-
-    Shared by planning (``DataSource.schema``) and execution
-    (``SnapshotTableReader``) so they can never disagree: a ``tag`` or
-    explicit ``snapshot_id`` option reads the pinned snapshot's OWN schema
-    (Iceberg time-travel semantics); a plain read uses the current schema.
-    Round-3 review: schema() resolved only snapshot_id, so reading by tag
-    on a table whose schema evolved after the tag planned with the current
-    schema while the reader yielded old-schema batches."""
-    sid = options.get("snapshot_id")
-    tag = options.get("tag")
-    if tag is not None:
-        refs = meta.get("refs", {})
-        if tag not in refs:
-            raise KeyError(f"tag {tag!r} not found (known: {sorted(refs)})")
-        sid = refs[tag]["snapshot_id"]
-    snapshot_id = int(sid) if sid is not None else meta["current_snapshot_id"]
-    snaps = {s["snapshot_id"]: s for s in meta["snapshots"]}
-    if snapshot_id not in snaps:
-        raise KeyError(f"snapshot {snapshot_id} not found (expired or never existed)")
-    snap = snaps[snapshot_id]
-    explicit = "snapshot_id" in options or "tag" in options
-    schema_id = (
-        snap.get("schema_id", meta["current_schema_id"])
-        if explicit
-        else meta["current_schema_id"]
-    )
-    struct = next(s["struct"] for s in meta["schemas"] if s["schema_id"] == schema_id)
-    return snapshot_id, snap, struct, schema_id
-
-
-def _field_ids_of(meta: dict, schema_id: int) -> dict[str, int]:
-    """``{column name -> stable field id}`` for a schema entry (mirrors
-    SnapshotTable.field_ids — this module works on the raw meta dict).
-    Pre-field-id schemas get positional ids, correct for additive-only
-    history (see table.py)."""
-    for s in meta["schemas"]:
-        if s["schema_id"] == schema_id:
-            if "field_ids" in s:
-                return dict(s["field_ids"])
-            names = [f["name"] for f in s["struct"]["fields"]]
-            return {n: i for i, n in enumerate(names)}
-    raise KeyError(f"schema_id {schema_id} not found")
-
-
 class _BucketPartition(InputPartition):
     def __init__(self, bucket: int, base_files: list[str], delta_files: list[str]):
         self.bucket = bucket
@@ -319,38 +251,20 @@ class _BucketPartition(InputPartition):
 
 
 class SnapshotTableReader(DataSourceReader):
-    def __init__(self, options: dict, meta: dict):
-        self.root = options["root"]
-        self.meta = meta
-        self.snapshot_id, self.snap, self.schema_json, self.schema_id = _resolve_snapshot_schema(
-            meta, options
+    """Plans and reads one snapshot of ``table``. Snapshot/schema choice
+    (``SnapshotTable.pin``), bucket and file pruning
+    (``SnapshotTable.plan_scan``), the field-id projection
+    (``SnapshotTable.column_sources``) and the LWW rule (``lww``) are the
+    table's own — this class only renders them in Arrow."""
+
+    def __init__(self, options: dict, table: SnapshotTable):
+        self.table = table
+        sid = options.get("snapshot_id")
+        self.snapshot_id, self.schema_id = table.pin(
+            None if sid is None else int(sid), options.get("tag")
         )
         self.include_tombstones = str(options.get("include_tombstones", "false")).lower() == "true"
-        self.key_cols = meta["key_cols"]
-        self.order_col = meta["order_col"]
-        # bucket spec is per-snapshot (rebucketing rewrites under a new
-        # count; time travel must prune with the count the files were
-        # written under)
-        self.num_buckets = self.snap.get("num_buckets", meta["num_buckets"])
-        self._pruned_bucket: int | None = None
-        self._stats_filters: list[tuple] = []
-        # field-id projection (rename/drop evolution, parity with
-        # table._read_files): per written-schema-id map of
-        # {target column name -> source column name in the file}. Files
-        # written under the read schema (or with no recorded writer
-        # schema — additive-only legacy) read by name.
-        self._file_schema = {
-            k: int(v) for k, v in meta.get("file_schemas", {}).items()
-        }
-        target_ids = _field_ids_of(meta, self.schema_id)
-        self._src_names: dict[int, dict[str, str]] = {}
-        for s in meta["schemas"]:
-            if s["schema_id"] == self.schema_id:
-                continue
-            by_id = {i: n for n, i in _field_ids_of(meta, s["schema_id"]).items()}
-            self._src_names[s["schema_id"]] = {
-                tn: by_id[ti] for tn, ti in target_ids.items() if ti in by_id
-            }
+        self._filters: list[tuple] = []
 
     # -------------------------------------------------------- planning
     _FILTER_OPS = (
@@ -363,136 +277,68 @@ class SnapshotTableReader(DataSourceReader):
     )
 
     def pushFilters(self, filters):  # noqa: N802 (API name)
-        """Two pruning layers; every filter is handed back to Spark (full
-        post-scan evaluation), so pruning is a pure optimization that
-        cannot change results.
-
-        1. Bucket pruning: equality on ALL key columns pins the bucket.
-        2. File skipping: comparison filters are matched against the
-           per-file min/max bounds recorded at commit time (stats.py) —
-           clean buckets only; see partitions().
-        """
-        eq = {
-            f.attribute[0]: f.value
-            for f in filters
-            if isinstance(f, EqualTo) and len(f.attribute) == 1 and isinstance(f.value, str)
-        }
-        # Pin the bucket ONLY when every key column is declared string:
-        # hashing a str literal against a non-string key column would hash
-        # the wrong bytes (Spark matches via implicit cast) and silently
-        # prune to the wrong bucket.
-        col_types = {f["name"]: f["type"] for f in self.schema_json["fields"]}
-        keys_are_strings = all(col_types.get(k) == "string" for k in self.key_cols)
-        if keys_are_strings and all(k in eq for k in self.key_cols):
-            self._pruned_bucket = bucket_of([eq[k] for k in self.key_cols], self.num_buckets)
+        """Translate the pushed filters for ``SnapshotTable.plan_scan``
+        (bucket pin + clean-bucket file skipping). Every filter is handed
+        back to Spark for post-scan evaluation, so pruning is a pure
+        optimization that cannot change results."""
         for f in filters:
             for klass, op in self._FILTER_OPS:
                 if isinstance(f, klass) and len(f.attribute) == 1:
                     value = list(f.value) if op == "in" else f.value
-                    self._stats_filters.append((f.attribute[0], op, value))
+                    self._filters.append((f.attribute[0], op, value))
                     break
         return filters  # Spark re-applies everything; we only pruned
 
     def partitions(self):
-        from ..stats import prune_files
-
-        base = self.snap.get("files", {})
-        delta = self.snap.get("delta_files", {})
-        fstats = self.meta.get("file_stats", {})
-        buckets = sorted({int(b) for b in base} | {int(b) for b, fs in delta.items() if fs})
-        if self._pruned_bucket is not None:
-            buckets = [b for b in buckets if b == self._pruned_bucket]
-        parts = []
-        for b in buckets:
-            base_rels = base.get(str(b), [])
-            delta_rels = delta.get(str(b), [])
-            if self._stats_filters and not delta_rels:
-                # file skipping is only sound where no read-time LWW
-                # resolve runs (stats.py safety rules): clean buckets
-                base_rels = prune_files(fstats, base_rels, self._stats_filters)
-            parts.append(
-                _BucketPartition(
-                    b,
-                    [os.path.join(self.root, f) for f in base_rels],
-                    [os.path.join(self.root, f) for f in delta_rels],
-                )
-            )
+        plan = self.table.plan_scan(self._filters, snapshot_id=self.snapshot_id)
+        parts = [_BucketPartition(b, base, delta) for b, (base, delta) in plan.items()]
         # empty table: one empty partition keeps the scan well-formed
         return parts or [_BucketPartition(-1, [], [])]
 
     # -------------------------------------------------------- execution
-    def read(self, partition: _BucketPartition) -> Iterator:
+    def _read_files(self, files: list[str], arrow_schema):
+        """Project each file onto the read schema: files written under a
+        different schema strictly by FIELD ID (no name fallback, so a name
+        dropped-then-readded never matches the old bytes); same-schema and
+        legacy files by name (columns added after the write read null)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        spark_schema = StructType.fromJson(self.schema_json)
-        out_fields = [
-            f.name
-            for f in spark_schema.fields
-            if self.include_tombstones or f.name != "_deleted"
-        ]
-        arrow_schema = to_arrow_schema(spark_schema)
-        out_schema = pa.schema([arrow_schema.field(n) for n in out_fields])
-        if not partition.base_files and not partition.delta_files:
-            yield pa.RecordBatch.from_pylist([], schema=out_schema)
-            return
-
-        def read_files(files):
-            tables = []
-            for f in files:
+        tables = []
+        for sid, grp in self.table.writer_schema_groups(files, self.schema_id).items():
+            src = None if sid == self.schema_id else self.table.column_sources(sid, self.schema_id)
+            for f in grp:
                 t = pq.read_table(f)
-                # Project onto the read schema. Files written under a
-                # DIFFERENT schema project strictly by FIELD ID (a renamed
-                # column's old name maps to the new one; a name that was
-                # dropped-then-readded must NOT match the old bytes —
-                # hence no name fallback when the writer schema is known).
-                # Same-schema / legacy files project by name: columns
-                # added after the write surface nulls.
-                sid = self._file_schema.get(os.path.relpath(f, self.root), self.schema_id)
-                remap = None if sid == self.schema_id else self._src_names.get(sid, {})
                 cols = []
                 for fld in arrow_schema:
-                    src = fld.name if remap is None else remap.get(fld.name)
-                    if src is not None and src in t.column_names:
-                        cols.append(t.column(src).cast(fld.type))
+                    name = fld.name if src is None else src.get(fld.name)
+                    if name is not None and name in t.column_names:
+                        cols.append(t.column(name).cast(fld.type))
                     else:
                         cols.append(pa.nulls(len(t), fld.type))
                 tables.append(pa.Table.from_arrays(cols, schema=arrow_schema))
-            return pa.concat_tables(tables) if tables else None
+        return pa.concat_tables(tables) if tables else arrow_schema.empty_table()
 
+    def read(self, partition: _BucketPartition) -> Iterator:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(self.table.schema(self.schema_id))
+        tbl = self._read_files(partition.base_files + partition.delta_files, arrow_schema)
+        has_tombstones = TOMBSTONE_COL in tbl.column_names
         if partition.delta_files:
-            # merge-on-read LWW inside the bucket: the bucket's BASE rows
-            # join the resolve (a delta may supersede them) — exactly
-            # table.read's dirty-bucket path, with the same (lsn, commit)
-            # max and nulls-first ordering the writer uses.
-            both = read_files(partition.base_files + partition.delta_files)
-            pdf = both.to_pandas()
-            order_cols = [self.order_col] + (["commit"] if "commit" in pdf.columns else [])
-            # deterministic tie-break, mirroring table.read / merge._LWW_PRI:
-            # a tombstone beats a live row at an exact (lsn, commit) tie
-            if "_deleted" in pdf.columns:
-                pdf["_lww_pri"] = pdf["_deleted"].fillna(False).astype(bool).astype(int)
-                order_cols = order_cols + ["_lww_pri"]
-            pdf = pdf.sort_values(order_cols, kind="stable", na_position="first")
-            pdf = pdf.groupby(self.key_cols, as_index=False, sort=False).tail(1)
-            if "_lww_pri" in pdf.columns:
-                pdf = pdf.drop(columns=["_lww_pri"])
-            base = pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
-        else:
-            base = read_files(partition.base_files)
-        if base is None:
-            yield pa.RecordBatch.from_pylist([], schema=out_schema)
-            return
-        if not self.include_tombstones and "_deleted" in base.column_names:
-            import pyarrow.compute as pc
-
-            mask = pc.fill_null(base.column("_deleted"), False)
-            base = base.filter(pc.invert(mask))
-        base = base.select(out_fields)
-        for batch in base.to_batches(max_chunksize=10_000):
-            yield batch
+            # merge-on-read: the bucket's BASE rows join the resolve (a
+            # delta may supersede them) — table.read's dirty-bucket path
+            deleted = tbl[TOMBSTONE_COL] if has_tombstones else None
+            tbl = lww.resolve_arrow(tbl, self.table.key_cols, self.table.order_col, deleted)
+        if has_tombstones and not self.include_tombstones:
+            live = pc.invert(pc.fill_null(tbl[TOMBSTONE_COL], False))
+            tbl = tbl.filter(live).drop_columns([TOMBSTONE_COL])
+        yield from tbl.to_batches(max_chunksize=10_000) or [
+            pa.RecordBatch.from_pylist([], schema=tbl.schema)
+        ]
 
 
 # ------------------------------------------------------------ the writer
@@ -529,25 +375,18 @@ class SnapshotTableWriter(DataSourceArrowWriter):
     keeps the bucket-local MOR resolve sound.
     """
 
-    def __init__(self, options: dict, meta: dict, write_schema: StructType, root: str):
+    def __init__(self, options: dict, table: SnapshotTable, write_schema: StructType):
         import uuid as _uuid
 
-        self.root = root
-        self.meta = meta
-        self.key_cols = meta["key_cols"]
-        self.order_col = meta["order_col"]
-        self.num_buckets = meta["num_buckets"]
+        self.root = table.root
+        self.key_cols = table.key_cols
+        self.order_col = table.order_col
+        self.num_buckets = table.num_buckets
         self.fence = options.get("fence")
         self.write_schema = write_schema
         # driver-chosen unique dir; tasks write under it, commit publishes
         self.data_rel = os.path.join("data", f"snap-{_uuid.uuid4().hex[:12]}")
-        table_schema = StructType.fromJson(
-            next(
-                s["struct"]
-                for s in meta["schemas"]
-                if s["schema_id"] == meta["current_schema_id"]
-            )
-        )
+        table_schema = table.schema()
         table_types = {f.name: f.dataType for f in table_schema.fields}
         for k in [*self.key_cols, self.order_col]:
             if k not in write_schema.fieldNames():
@@ -634,8 +473,6 @@ class SnapshotTableWriter(DataSourceArrowWriter):
         return _WriteMessage(files)
 
     def commit(self, messages) -> None:
-        from ..table import SnapshotTable
-
         files_by_bucket: dict[int, list[str]] = {}
         for m in messages:
             if m is None:
@@ -690,15 +527,7 @@ def upsert_dataframe(df, root: str, fence: str | None = None) -> None:
     """
     from pyspark.sql import functions as F
 
-    meta = _load_meta(root)
-    table_schema = StructType.fromJson(
-        next(
-            s["struct"]
-            for s in meta["schemas"]
-            if s["schema_id"] == meta["current_schema_id"]
-        )
-    )
-    table_cols = set(table_schema.fieldNames())
+    table_cols = set(SnapshotTable.load(root).schema().fieldNames())
     if (
         "content_sha256" in table_cols
         and "content" in df.columns
@@ -737,11 +566,11 @@ class SnapshotTableDataSource(DataSource):
     def name(cls) -> str:
         return "snapshot_table"
 
-    def _root(self) -> str:
+    def _table(self) -> SnapshotTable:
         root = self.options.get("root")
         if not root:
             raise ValueError(self._NO_ROOT)
-        return root
+        return SnapshotTable.load(root)
 
     def writer(self, schema: StructType, overwrite: bool) -> SnapshotTableWriter:
         if overwrite:
@@ -750,16 +579,14 @@ class SnapshotTableDataSource(DataSource):
                 "upsert here: read-time LWW resolves new rows against stored "
                 "keys); full rewrites go through compaction/maintenance"
             )
-        root = self._root()
-        return SnapshotTableWriter(dict(self.options), _load_meta(root), schema, root)
+        return SnapshotTableWriter(dict(self.options), self._table(), schema)
 
     def schema(self) -> StructType:
-        meta = _load_meta(self._root())
-        _sid, _snap, struct, _schema_id = _resolve_snapshot_schema(meta, dict(self.options))
-        full = StructType.fromJson(struct)
-        if str(self.options.get("include_tombstones", "false")).lower() == "true":
+        reader = self.reader(None)
+        full = reader.table.schema(reader.schema_id)
+        if reader.include_tombstones:
             return full
-        return StructType([f for f in full.fields if f.name != "_deleted"])
+        return StructType([f for f in full.fields if f.name != TOMBSTONE_COL])
 
-    def reader(self, schema: StructType) -> SnapshotTableReader:
-        return SnapshotTableReader(dict(self.options), _load_meta(self._root()))
+    def reader(self, schema: StructType | None) -> SnapshotTableReader:
+        return SnapshotTableReader(dict(self.options), self._table())

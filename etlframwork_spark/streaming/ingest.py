@@ -32,7 +32,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.types import StructField, StructType
 
 from ..lineage import MetricsTable
-from ..merge import SHA_COL, merge_batch
+from ..merge import RESOLVES, SHA_COL, WRITE_MODES, merge_batch
 from ..table import SnapshotTable
 from .sources import FileStreamSource
 
@@ -80,10 +80,11 @@ class IngestJob:
     order_col: str = "lsn"
     num_buckets: int = 16
     max_files_per_trigger: int = 8
-    resolve: str = "maxby"  # or "two_phase" / "sorted_merge" (north-rule-literal)
+    # batch LWW dedup: "maxby" (map-side partial max_by) or "raw" (mor
+    # only: no batch dedup, every event a delta row) — see merge.py
+    resolve: str = "maxby"
     write_mode: str = "cow"  # or "mor" (delta-append merge-on-read fast path)
     compact_min_deltas: int | None = None  # mor: fold deltas when a bucket reaches this many
-    num_salts: int = 16
     available_now: bool = True  # drain-and-stop; else continuous
     processing_interval: str = "5 seconds"
     # metadata hygiene cadence: every N epochs expire old snapshots and
@@ -91,6 +92,14 @@ class IngestJob:
     # + retained window) instead of O(epochs). None disables.
     expire_every: int | None = 50
     keep_snapshots: int = 10
+
+    def __post_init__(self) -> None:
+        # fail on a bad config here, not in the first foreachBatch after
+        # the checkpoint dir already exists
+        if self.resolve not in RESOLVES:
+            raise ValueError(f"unknown resolve {self.resolve!r}; one of {RESOLVES}")
+        if self.write_mode not in WRITE_MODES:
+            raise ValueError(f"unknown write_mode {self.write_mode!r}; one of {WRITE_MODES}")
 
     @classmethod
     def from_dict(cls, d: dict) -> "IngestJob":
@@ -144,7 +153,6 @@ def run_ingest(
             epoch_id=epoch_id,
             metrics=metrics,
             resolve=job.resolve,
-            num_salts=job.num_salts,
             quarantine_dir=job.quarantine_dir,
             write_mode=job.write_mode,
             fault_injector=fault_injector,

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from . import lww
 from .stats import filters_to_expr, prune_files, validate_filters
 
 _VERSION_RE = re.compile(r"^v(\d+)\.json$")
@@ -605,20 +606,60 @@ class SnapshotTable:
         snap = self.snapshot(snapshot_id)
         return {int(b): len(fs) for b, fs in snap.get("delta_files", {}).items() if fs}
 
-    def scan_files(
+    def pin(self, snapshot_id: int | None = None, tag: str | None = None) -> tuple[int | None, int]:
+        """``(snapshot_id, schema_id)`` a read of ``snapshot_id`` or ``tag``
+        sees. Iceberg time travel: an explicitly pinned snapshot (id or
+        tag) reads its OWN schema; a plain read (``None``) reads the
+        current snapshot under the current registry schema. Shared by
+        ``read`` and the DSv2 reader so planning and execution agree."""
+        if tag is not None:
+            if snapshot_id is not None:
+                raise ValueError("pass snapshot_id or tag, not both")
+            snapshot_id = self.resolve_tag(tag)
+        if snapshot_id is None:
+            return None, self.meta["current_schema_id"]
+        snap = self.snapshot(snapshot_id)
+        return snapshot_id, snap.get("schema_id", self.meta["current_schema_id"])
+
+    def key_bucket(self, eq: dict[str, Any], snapshot_id: int | None = None) -> int | None:
+        """The one bucket that can hold the key pinned by the equality
+        values ``eq`` (``{column: value}``), or ``None`` when ``eq`` does
+        not pin every key column.
+
+        Pins ONLY when every key column is declared string and every value
+        is a str: a str value on (say) a bigint key would hash the UTF-8
+        bytes of "5" (wrong bucket) while Spark's re-applied predicate
+        still matches via implicit cast — silently empty results. Not
+        pinning is always safe (just a wider scan). The bucket count is the
+        snapshot's own (rebucketing keeps time travel honest)."""
+        from pyspark.sql.types import StringType
+
+        from .sources.snapshot_datasource import bucket_of
+
+        types = {f.name: f.dataType for f in self.schema().fields}
+        if not all(
+            isinstance(types.get(k), StringType) and isinstance(eq.get(k), str)
+            for k in self.key_cols
+        ):
+            return None
+        nb = self.snapshot(snapshot_id).get("num_buckets", self.num_buckets)
+        return bucket_of([eq[k] for k in self.key_cols], nb)
+
+    def plan_scan(
         self,
         filters: list[tuple] | None = None,
         buckets: Iterable[int] | None = None,
         snapshot_id: int | None = None,
-    ) -> tuple[list[str], list[str]]:
-        """Plan a filtered scan: the exact ``(clean_files, dirty_files)``
-        sets ``read(filters=...)`` will hand to Spark.
+    ) -> dict[int, tuple[list[str], list[str]]]:
+        """Plan a filtered scan per bucket: ``{bucket: (base_files,
+        delta_files)}`` with absolute paths. ``read`` and the DSv2 reader
+        both plan through here.
 
         Three pruning layers, each a pure optimization (the caller
         re-applies the predicate on the DataFrame):
 
         1. **bucket pruning** — equality filters covering ALL key columns
-           pin the single bucket that can hold the key;
+           pin the single bucket that can hold the key (``key_bucket``);
         2. **file skipping (clean buckets only)** — per-file min/max bounds
            recorded at commit time (stats.py) drop files whose bounds
            cannot satisfy the conjunction;
@@ -630,30 +671,57 @@ class SnapshotTable:
         """
         filters = validate_filters(filters) if filters else []
         if buckets is None and filters:
-            eq = {c: v for c, op, v in filters if op == "=" and isinstance(v, str)}
-            # Pin the bucket ONLY when every key column is declared string:
-            # a str filter value on (say) a bigint key would hash the UTF-8
-            # bytes of "5" (wrong bucket) while Spark's re-applied predicate
-            # still matches via implicit cast — silently empty results.
-            # Skipping the pin is always safe (just a wider scan).
-            from pyspark.sql.types import StringType
-
-            types = {f.name: f.dataType for f in self.schema().fields}
-            keys_are_strings = all(isinstance(types.get(k), StringType) for k in self.key_cols)
-            if keys_are_strings and all(k in eq for k in self.key_cols):
-                from .sources.snapshot_datasource import bucket_of
-
-                nb = self.snapshot(snapshot_id).get("num_buckets", self.num_buckets)
-                buckets = [bucket_of([eq[k] for k in self.key_cols], nb)]
+            pinned = self.key_bucket({c: v for c, op, v in filters if op == "="}, snapshot_id)
+            if pinned is not None:
+                buckets = [pinned]
         clean_b, dirty_b = self._split_buckets_for_read(buckets, snapshot_id)
-        clean_files = self.files_for(buckets=clean_b, snapshot_id=snapshot_id) if clean_b else []
-        dirty_files = self.files_for(buckets=dirty_b, snapshot_id=snapshot_id) if dirty_b else []
-        if filters and clean_files:
-            fstats = self.meta.get("file_stats", {})
-            rels = [os.path.relpath(p, self.root) for p in clean_files]
-            kept = set(prune_files(fstats, rels, filters))
-            clean_files = [p for p, r in zip(clean_files, rels) if r in kept]
-        return clean_files, dirty_files
+        snap = self.snapshot(snapshot_id)
+        fstats = self.meta.get("file_stats", {})
+        plan = {}
+        for b in sorted(clean_b | dirty_b):
+            base = snap["files"].get(str(b), [])
+            delta = snap.get("delta_files", {}).get(str(b), [])
+            if filters and b in clean_b:
+                base = prune_files(fstats, base, filters)
+            plan[b] = (
+                [os.path.join(self.root, f) for f in base],
+                [os.path.join(self.root, f) for f in delta],
+            )
+        return plan
+
+    def scan_files(
+        self,
+        filters: list[tuple] | None = None,
+        buckets: Iterable[int] | None = None,
+        snapshot_id: int | None = None,
+    ) -> tuple[list[str], list[str]]:
+        """The exact ``(clean_files, dirty_files)`` sets ``read(filters=...)``
+        hands to Spark (``plan_scan`` flattened; dirty = base + delta files
+        of delta-carrying buckets)."""
+        plan = self.plan_scan(filters, buckets, snapshot_id).values()
+        clean = [f for base, delta in plan if not delta for f in base]
+        dirty = [f for base, delta in plan if delta for f in base + delta]
+        return clean, dirty
+
+    def column_sources(self, written_sid: int, target_sid: int) -> dict[str, str]:
+        """``{target column -> column name in a file written under
+        written_sid}``, matched by stable field id: a renamed column's old
+        name maps to the new one; a target column absent from the writer
+        schema (added later, or dropped-then-readded under a fresh id) is
+        left out and reads back as null."""
+        by_id = {i: n for n, i in self.field_ids(written_sid).items()}
+        return {n: by_id[i] for n, i in self.field_ids(target_sid).items() if i in by_id}
+
+    def writer_schema_groups(self, files: list[str], target_sid: int) -> dict[int, list[str]]:
+        """Group data files by the schema id they were WRITTEN under
+        (``meta['file_schemas']``, recorded at commit time); files with no
+        recorded writer schema (additive-only legacy) count as
+        ``target_sid`` and read by name."""
+        fsch = self.meta.get("file_schemas", {})
+        groups: dict[int, list[str]] = {}
+        for p in files:
+            groups.setdefault(int(fsch.get(os.path.relpath(p, self.root), target_sid)), []).append(p)
+        return groups
 
     def _read_files(
         self,
@@ -665,16 +733,15 @@ class SnapshotTable:
         """Read data files and project them onto ``schema``.
 
         Field-id-aware (Iceberg read semantics): each file is read with
-        the schema it was WRITTEN under (``meta['file_schemas']``,
-        recorded at commit time) and projected onto the target schema by
-        stable field id — a renamed column's old files read back under
-        the new name, a dropped column is omitted, an added column
-        back-fills null. Files with no recorded writer schema — or when
-        the caller supplied an explicit out-of-registry ``schema``
-        (``target_sid is None``, the mid-merge evolution path) — read by
-        NAME with the target schema: the pre-evolution behavior, correct
-        for any additive-only history because additive evolution never
-        reuses or moves a name.
+        the schema it was WRITTEN under and projected onto the target
+        schema by stable field id (``column_sources``) — a renamed
+        column's old files read back under the new name, a dropped column
+        is omitted, an added column back-fills null. Files with no
+        recorded writer schema — or when the caller supplied an explicit
+        out-of-registry ``schema`` (``target_sid is None``, the mid-merge
+        evolution path) — read by NAME with the target schema: the
+        pre-evolution behavior, correct for any additive-only history
+        because additive evolution never reuses or moves a name.
 
         Grouping is by writer schema id, so a table with S live schema
         versions costs S parquet scans (each a single multi-file scan
@@ -682,27 +749,17 @@ class SnapshotTable:
         """
         if target_sid is None:
             return spark.read.schema(schema).parquet(*files)
-        fsch = self.meta.get("file_schemas", {})
-        groups: dict[int, list[str]] = {}
-        for p in files:
-            rel = os.path.relpath(p, self.root)
-            groups.setdefault(int(fsch.get(rel, target_sid)), []).append(p)
-        target_ids = self.field_ids(target_sid)
         parts: list[DataFrame] = []
-        for sid, grp in sorted(groups.items()):
+        for sid, grp in sorted(self.writer_schema_groups(files, target_sid).items()):
             if sid == target_sid:
                 parts.append(spark.read.schema(schema).parquet(*grp))
                 continue
-            written = self.schema(sid)
-            name_by_id = {i: n for n, i in self.field_ids(sid).items()}
-            cols = []
-            for f in schema.fields:
-                src = name_by_id.get(target_ids[f.name])
-                if src is not None:
-                    cols.append(F.col(src).cast(f.dataType).alias(f.name))
-                else:
-                    cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-            parts.append(spark.read.schema(written).parquet(*grp).select(*cols))
+            src = self.column_sources(sid, target_sid)
+            cols = [
+                (F.col(src[f.name]) if f.name in src else F.lit(None)).cast(f.dataType).alias(f.name)
+                for f in schema.fields
+            ]
+            parts.append(spark.read.schema(self.schema(sid)).parquet(*grp).select(*cols))
         df = parts[0]
         for extra in parts[1:]:
             df = df.unionByName(extra)
@@ -723,26 +780,17 @@ class SnapshotTable:
 
         Always reads with an explicit schema so files written before an
         additive evolution come back with nulls in new columns. By default
-        that is the CURRENT registry schema (Iceberg read-with-current-
-        schema); ``schema`` overrides it (used mid-merge for an evolution
-        that is not yet committed). Delete tombstones are filtered out and
-        the hidden column dropped unless ``include_tombstones``.
-        ``tag`` is name-based time travel (``set_tag``).
+        that is the schema ``pin`` chooses (a pinned snapshot's own, else
+        the current registry schema); ``schema_id`` or ``schema``
+        overrides it (``schema`` is used mid-merge for an evolution that
+        is not yet committed). Delete tombstones are filtered out and the
+        hidden column dropped unless ``include_tombstones``. ``tag`` is
+        name-based time travel (``set_tag``).
         """
-        if tag is not None:
-            if snapshot_id is not None:
-                raise ValueError("pass snapshot_id or tag, not both")
-            snapshot_id = self.resolve_tag(tag)
+        snapshot_id, pinned_sid = self.pin(snapshot_id, tag)
         target_sid: int | None = None
         if schema is None:
-            if schema_id is None and snapshot_id is not None:
-                # Iceberg time travel: an explicitly pinned snapshot (id or
-                # tag) reads its OWN schema — matching the DSv2 surface; a
-                # plain read uses the current registry schema
-                schema_id = self.snapshot(snapshot_id).get(
-                    "schema_id", self.meta["current_schema_id"]
-                )
-            target_sid = self.meta["current_schema_id"] if schema_id is None else schema_id
+            target_sid = pinned_sid if schema_id is None else schema_id
             schema = self.schema(target_sid)
         # merge-on-read: delta files may carry newer versions of keys in the
         # base (and each other) — resolve last-writer-wins at read time.
@@ -762,24 +810,8 @@ class SnapshotTable:
             parts.append(self._read_files(spark, clean_files, schema, target_sid))
         if dirty_files:
             ddf = self._read_files(spark, dirty_files, schema, target_sid)
-            cols = schema.fieldNames()
-            order_cols = [self.order_col] + (["commit"] if "commit" in cols else [])
-            # same deterministic tie-break as the writer (merge._LWW_PRI):
-            # at an exact (lsn, commit) tie a tombstone beats a live row —
-            # e.g. a delete_where tombstone propagated as a MOR delta over
-            # the identical stored base row.
-            order_struct = [F.col(c) for c in order_cols]
-            if TOMBSTONE_COL in cols:
-                order_struct.append(
-                    F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)).cast("int").alias("_lww_pri")
-                )
-            winner = F.max_by(
-                F.struct(*[F.col(c) for c in cols]),
-                F.struct(*order_struct),
-            ).alias("_w")
-            parts.append(
-                ddf.groupBy(*[F.col(k) for k in self.key_cols]).agg(winner).select("_w.*")
-            )
+            deleted = F.col(TOMBSTONE_COL) if TOMBSTONE_COL in schema.fieldNames() else None
+            parts.append(lww.resolve(ddf, self.key_cols, self.order_col, deleted))
         if not parts:
             df = spark.createDataFrame([], schema)
         elif len(parts) == 1:

@@ -26,7 +26,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int, required=True)
     ap.add_argument("--events", type=int, default=2_000_000)
-    ap.add_argument("--resolve", default="maxby")
+    ap.add_argument("--resolve", default="maxby", choices=["maxby", "raw"])
     ap.add_argument("--hot-ratio", type=float, default=0.2)
     ap.add_argument("--num-buckets", type=int, default=64)
     ap.add_argument("--files", type=int, default=32)

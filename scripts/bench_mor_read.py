@@ -35,6 +35,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from etlframwork_spark import lww
     from etlframwork_spark.events import CDC_BASE_SCHEMA, TARGET_BASE_SCHEMA
     from etlframwork_spark.merge import merge_batch
     from etlframwork_spark.session import build_session
@@ -106,13 +107,7 @@ def main() -> None:
             schema = table.schema()
             files = table.files_for()
             df = spark.read.schema(schema).parquet(*files)
-            cols = schema.fieldNames()
-            order_cols = [table.order_col] + (["commit"] if "commit" in cols else [])
-            winner = F.max_by(
-                F.struct(*[F.col(c) for c in cols]),
-                F.struct(*[F.col(c) for c in order_cols]),
-            ).alias("_w")
-            df = df.groupBy(*[F.col(k) for k in table.key_cols]).agg(winner).select("_w.*")
+            df = lww.resolve(df, table.key_cols, table.order_col, F.col(TOMBSTONE_COL))
             return df.filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))).drop(TOMBSTONE_COL)
 
         global_s, global_sh = timed(global_read)

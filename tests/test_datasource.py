@@ -114,7 +114,7 @@ def test_key_equality_filters_prune_to_one_bucket(spark, tmp_path):
     # planning-level check: pushFilters pins the bucket, partitions() = 1
     from pyspark.sql.datasource import EqualTo
 
-    reader = SnapshotTableReader({"root": table.root}, table.meta)
+    reader = SnapshotTableReader({"root": table.root}, table)
     leftover = reader.pushFilters([EqualTo(("repo",), repo), EqualTo(("path",), path)])
     assert len(list(leftover)) == 2  # everything handed back to Spark
     parts = reader.partitions()
@@ -154,6 +154,31 @@ def test_tag_read_uses_tagged_snapshot_schema(spark, tmp_path):
     )
     assert "lang" not in via_ds.columns  # planned with the tagged schema
     assert _rows(via_ds) == _rows(table.read(spark, tag="pre-evolution"))
+
+
+def test_dirty_bucket_read_keeps_bigint_exact(spark, tmp_path):
+    """A dirty (delta-carrying) bucket is LWW-resolved inside the DSv2
+    reader. A tombstone's nulled payload makes the bigint column nullable;
+    the resolve must keep it int64 — a detour through float64 rounds any
+    value above 2^53 (2^60 + 1 came back as 2^60)."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    schema = StructType(
+        [StructField("k", StringType()), StructField("big", LongType()), StructField("lsn", LongType())]
+    )
+    table = SnapshotTable.create(
+        str(tmp_path / "big"), schema, key_cols=["k"], order_col="lsn", num_buckets=1
+    )
+    ev = StructType(schema.fields + [StructField("op", StringType())])
+    batch = [("a", 2**60 + 1, 1, "insert"), ("b", 7, 1, "insert"), ("b", None, 2, "delete")]
+    merge_batch(
+        spark, table, spark.createDataFrame(batch, ev), job_id="big", epoch_id=0, write_mode="mor"
+    )
+    table.refresh()
+    assert table.has_deltas()
+    _register(spark)
+    via_ds = spark.read.format("snapshot_table").option("root", table.root).load()
+    assert _rows(via_ds) == _rows(table.read(spark)) == [("a", 2**60 + 1, 1)]
 
 
 # ------------------------------------------------------------ DSv2 writer

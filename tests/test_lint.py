@@ -63,3 +63,25 @@ def test_collect_confined_to_metadata_paths():
         if ".collect()" in src and base not in COLLECT_ALLOWED:
             problems.append(path)
     assert not problems, f"collect() outside metadata paths: {problems}"
+
+
+# The LWW rule (order columns, delete-beats-live priority, max_by winner)
+# lives in lww.py only; any other engine file growing its own copy is the
+# drift that once made three implementations disagree.
+LWW_COPIES = [
+    (re.compile(r"\bmax_by\("), "max_by( aggregate"),
+    (re.compile(r"""["']commit["']\s+in\b"""), '"commit" in ... order derivation'),
+]
+
+
+def test_lww_rule_only_in_lww_module():
+    problems = []
+    for path in _engine_files():
+        if os.path.basename(path) == "lww.py":
+            continue
+        with open(path) as fh:
+            src = fh.read()
+        for rx, why in LWW_COPIES:
+            if rx.search(src):
+                problems.append(f"{path}: {why}")
+    assert not problems, problems

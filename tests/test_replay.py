@@ -36,6 +36,20 @@ def _table_digests(spark, table):
     return {(r["repo"], r["path"]): r["content_sha256"] for r in rows}
 
 
+def test_ingest_job_rejects_unknown_strategy_before_start(tmp_path):
+    """A bad resolve/write_mode fails at config load, before any checkpoint
+    dir exists — not inside the first foreachBatch."""
+    base = {
+        "job_id": "bad", "events_dir": str(tmp_path / "events"),
+        "table_root": str(tmp_path / "t"), "checkpoint_dir": str(tmp_path / "ckpt"),
+    }
+    with pytest.raises(ValueError, match="maxby.*raw"):
+        IngestJob.from_dict({**base, "resolve": "sorted_merge"})
+    with pytest.raises(ValueError, match="cow.*mor"):
+        IngestJob.from_dict({**base, "write_mode": "append"})
+    assert not (tmp_path / "ckpt").exists()
+
+
 def test_streaming_replay_matches_oracle(spark, tmp_path):
     spec = EventLogSpec(seed=42, n_events=5000, n_repos=50, paths_per_repo=20, p_delete=0.08, n_files=6)
     log = generate_event_log(str(tmp_path / "events"), spec)
