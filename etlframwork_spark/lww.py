@@ -27,6 +27,9 @@ Two renderings of the same rule:
   the merge-on-read path of ``SnapshotTable.read``.
 * :func:`resolve_arrow` — a stable Arrow sort (nulls at start) plus the
   last position per key. Used by the DSv2 reader inside one bucket.
+
+:func:`scrub` turns winning deletes into tombstones that keep their place
+in this order (``merge_batch`` and ``delete_where``).
 """
 
 from __future__ import annotations
@@ -35,11 +38,36 @@ from typing import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def order_cols(order_col: str, columns: Iterable[str]) -> list[str]:
     """The LWW order columns of a table with these ``columns``."""
     return [order_col] + (["commit"] if "commit" in columns else [])
+
+
+def scrub(
+    df: DataFrame,
+    deleted: Column,
+    schema: StructType,
+    key_cols: list[str],
+    order_col: str,
+    keep: Iterable[str] = (),
+) -> DataFrame:
+    """Null the payload of the rows ``deleted`` marks (tombstones).
+
+    The key and the FULL order key stay: nulling ``commit`` would let a
+    later distinct event at the same lsn beat the tombstone and resurrect
+    the key. ``schema`` names the columns to scrub; ``keep`` spares more.
+    """
+    kept = {*key_cols, *order_cols(order_col, schema.fieldNames()), *keep}
+    return df.withColumns(
+        {
+            f.name: F.when(deleted, F.lit(None).cast(f.dataType)).otherwise(F.col(f.name))
+            for f in schema.fields
+            if f.name not in kept
+        }
+    )
 
 
 def resolve(

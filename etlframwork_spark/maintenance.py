@@ -1,4 +1,9 @@
-"""Table maintenance: tombstone purge + snapshot/file GC.
+"""Table maintenance: tombstone purge, delta compaction, rebucketing, and
+snapshot/file GC.
+
+Each rewrite here decides only which rows and buckets it rewrites and what
+its commit carries; the physical write is ``SnapshotTable.write_buckets``
+and a commit conflict re-runs it through ``table.retry_on_conflict``.
 
 At 10^10-event scale delete tombstones accrue without bound. A tombstone
 is only needed while a LOWER-lsn event for its key could still be
@@ -14,10 +19,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .table import BUCKET_COL, TOMBSTONE_COL, SnapshotTable, bucket_expr
-
-
-_MAX_RECOMPUTE = 3
+from .merge import bucket_counts
+from .table import TOMBSTONE_COL, SnapshotTable, retry_on_conflict
 
 
 def purge_tombstones(
@@ -29,56 +32,25 @@ def purge_tombstones(
     guarantees no re-delivery below ``watermark_lsn``. Racing a concurrent
     writer to the same buckets fails the commit (CommitConflict) and the
     rewrite is recomputed from fresh state."""
-    from .table import CommitConflict
-
-    for attempt in range(_MAX_RECOMPUTE):
-        try:
-            return _purge_once(spark, table, watermark_lsn)
-        except CommitConflict:
-            if attempt == _MAX_RECOMPUTE - 1:
-                raise
-    raise AssertionError("unreachable")
+    return retry_on_conflict(lambda: _purge_once(spark, table, watermark_lsn))
 
 
 def _purge_once(spark: SparkSession, table: SnapshotTable, watermark_lsn: int) -> dict:
     table.refresh()
     read_snapshot = table.snapshot()["snapshot_id"]
-    full = table.read(spark, include_tombstones=True)
     purgeable = F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)) & (
         F.col(table.order_col) < F.lit(watermark_lsn)
     )
-    nb = table.num_buckets
-    hit = (
-        full.filter(purgeable)
-        .select(bucket_expr(table.key_cols, nb).alias(BUCKET_COL))
-        .groupBy(BUCKET_COL)
-        .count()
-        .collect()
-    )
-    buckets = sorted(r[BUCKET_COL] for r in hit)
-    n_purged = sum(r["count"] for r in hit)
+    hit = bucket_counts(table.read(spark, include_tombstones=True).filter(purgeable), table)
+    buckets = sorted(hit)
+    n_purged = sum(hit.values())
     if not buckets:
         return {"buckets_rewritten": 0, "tombstones_purged": 0}
 
-    keep = (
-        table.read(spark, buckets=buckets, include_tombstones=True)
-        .filter(~purgeable)
-        .withColumn(BUCKET_COL, bucket_expr(table.key_cols, nb))
-    )
-    data_dir = table.new_data_dir()
-    (
-        keep.repartition(max(len(buckets), 1), F.col(BUCKET_COL))
-        # same key-clustered layout as sorted compaction: the rewrite is
-        # already paying the shuffle, sorting keeps per-file key bounds
-        # tight for stats.py file skipping
-        .sortWithinPartitions(BUCKET_COL, *table.key_cols)
-        .write.partitionBy(BUCKET_COL)
-        .option("compression", "zstd")
-        .parquet(data_dir)
-    )
-    from .merge import _list_written_files
-
-    files_by_bucket = _list_written_files(data_dir)
+    keep = table.read(spark, buckets=buckets, include_tombstones=True).filter(~purgeable)
+    # same key-clustered layout as compaction: the rewrite is already paying
+    # the shuffle, sorting keeps per-file key bounds tight for stats.py
+    files_by_bucket = table.write_buckets(keep, table.num_buckets, len(buckets), sort=True)
     table.commit(
         files_by_bucket,
         buckets,
@@ -92,7 +64,6 @@ def compact_buckets(
     spark: SparkSession,
     table: SnapshotTable,
     min_deltas: int = 1,
-    sort_by_key: bool = True,
     max_records_per_file: int | None = None,
 ) -> dict:
     """Fold merge-on-read delta files back into bucket base files.
@@ -106,11 +77,10 @@ def compact_buckets(
     commit (CommitConflict) and the compaction is recomputed from fresh
     state — never silently dropping the new delta.
 
-    **Clustering for file skipping** (the stats.py payoff): with
-    ``sort_by_key`` (default) the rewrite sorts each bucket by the key
-    columns, and ``max_records_per_file`` splits the sorted stream into
-    size-bounded files. Each file then covers a CONTIGUOUS key range, so
-    its recorded (repo, path) bounds are tight and a repo-equality
+    **Clustering for file skipping** (the stats.py payoff): the rewrite
+    sorts each bucket by the key columns, and ``max_records_per_file``
+    splits the sorted stream into size-bounded files. Each file then
+    covers a CONTIGUOUS key range, so its recorded (repo, path) bounds are tight and a repo-equality
     predicate — which hash bucketing alone cannot prune (the bucket is
     hash(repo, path), so one repo's paths land everywhere) — skips every
     file whose range excludes it. This is Iceberg's sort-order/rewrite
@@ -118,23 +88,11 @@ def compact_buckets(
     read-side pruning. With ``max_records_per_file=None`` each bucket
     stays one file (today's layout) and sorting costs one in-task sort.
     """
-    from .table import CommitConflict
-
-    for attempt in range(_MAX_RECOMPUTE):
-        try:
-            return _compact_once(spark, table, min_deltas, sort_by_key, max_records_per_file)
-        except CommitConflict:
-            if attempt == _MAX_RECOMPUTE - 1:
-                raise
-    raise AssertionError("unreachable")
+    return retry_on_conflict(lambda: _compact_once(spark, table, min_deltas, max_records_per_file))
 
 
 def _compact_once(
-    spark: SparkSession,
-    table: SnapshotTable,
-    min_deltas: int,
-    sort_by_key: bool = True,
-    max_records_per_file: int | None = None,
+    spark: SparkSession, table: SnapshotTable, min_deltas: int, max_records_per_file: int | None
 ) -> dict:
     table.refresh()
     read_snapshot = table.snapshot()["snapshot_id"]
@@ -143,24 +101,10 @@ def _compact_once(
     if not buckets:
         return {"buckets_compacted": 0, "delta_files_folded": 0}
     folded = sum(counts[b] for b in buckets)
-    keep = table.read(spark, buckets=buckets, include_tombstones=True).withColumn(
-        BUCKET_COL, bucket_expr(table.key_cols, table.num_buckets)
+    keep = table.read(spark, buckets=buckets, include_tombstones=True)
+    files_by_bucket = table.write_buckets(
+        keep, table.num_buckets, len(buckets), sort=True, max_records_per_file=max_records_per_file
     )
-    data_dir = table.new_data_dir()
-    out = keep.repartition(max(len(buckets), 1), F.col(BUCKET_COL))
-    if sort_by_key:
-        # rows arrive grouped by bucket within the task; sorting by
-        # (bucket, *key) keeps the grouping and orders each bucket's rows
-        # by key, so maxRecordsPerFile cuts the stream into contiguous
-        # key-range runs (tight per-file bounds for stats.py skipping)
-        out = out.sortWithinPartitions(BUCKET_COL, *table.key_cols)
-    writer = out.write.partitionBy(BUCKET_COL).option("compression", "zstd")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-    writer.parquet(data_dir)
-    from .merge import _list_written_files
-
-    files_by_bucket = _list_written_files(data_dir)
     table.commit(
         files_by_bucket,
         buckets,
@@ -171,12 +115,7 @@ def _compact_once(
     return {"buckets_compacted": len(buckets), "delta_files_folded": folded}
 
 
-def rebucket(
-    spark: SparkSession,
-    table: SnapshotTable,
-    new_num_buckets: int,
-    max_records_per_file: int | None = None,
-) -> dict:
+def rebucket(spark: SparkSession, table: SnapshotTable, new_num_buckets: int) -> dict:
     """Evolve the table's bucket count (Iceberg partition-spec evolution).
 
     A table created at B=4 that grows 100x saturates write parallelism
@@ -195,50 +134,25 @@ def rebucket(
     separate watermark-gated op). Racing a concurrent writer fails the
     commit (CommitConflict) and the rewrite recomputes from fresh state.
     """
-    from .table import CommitConflict
-
     if int(new_num_buckets) < 1:
         raise ValueError(f"new_num_buckets must be >= 1, got {new_num_buckets}")
-    for attempt in range(_MAX_RECOMPUTE):
-        try:
-            return _rebucket_once(spark, table, int(new_num_buckets), max_records_per_file)
-        except CommitConflict:
-            if attempt == _MAX_RECOMPUTE - 1:
-                raise
-    raise AssertionError("unreachable")
+    return retry_on_conflict(lambda: _rebucket_once(spark, table, int(new_num_buckets)))
 
 
-def _rebucket_once(
-    spark: SparkSession,
-    table: SnapshotTable,
-    new_num_buckets: int,
-    max_records_per_file: int | None,
-) -> dict:
+def _rebucket_once(spark: SparkSession, table: SnapshotTable, new_num_buckets: int) -> dict:
     table.refresh()
     if new_num_buckets == table.num_buckets:
         return {"rebucketed": False, "num_buckets": new_num_buckets}
-    read_snapshot = table.snapshot()["snapshot_id"]
     snap = table.snapshot()
+    read_snapshot = snap["snapshot_id"]
     old_buckets = sorted(
         {int(b) for b in snap["files"]}
         | {int(b) for b, fs in snap.get("delta_files", {}).items() if fs}
     )
-    full = table.read(spark, include_tombstones=True).withColumn(
-        BUCKET_COL, bucket_expr(table.key_cols, new_num_buckets)
-    )
-    data_dir = table.new_data_dir()
+    full = table.read(spark, include_tombstones=True)
     # 4x partition spread for the same balls-in-bins reason as merge's
     # write distribution: each bucket still maps wholly to one task
-    out = full.repartition(4 * new_num_buckets, F.col(BUCKET_COL)).sortWithinPartitions(
-        BUCKET_COL, *table.key_cols
-    )
-    writer = out.write.partitionBy(BUCKET_COL).option("compression", "zstd")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-    writer.parquet(data_dir)
-    from .merge import _list_written_files
-
-    files_by_bucket = _list_written_files(data_dir)
+    files_by_bucket = table.write_buckets(full, new_num_buckets, 4 * new_num_buckets, sort=True)
     changed = sorted(set(old_buckets) | set(files_by_bucket))
     table.commit(
         files_by_bucket,

@@ -28,9 +28,12 @@ sorted-merge apply)" as a copy-on-write merge into the bucketed
     resolve to read time changes nothing; ties (event re-delivery) are
     exact duplicates and collapse. A late LOWER-lsn event never clobbers:
     the stored row participates in the same max with its stored lsn.
-5.  winners that are deletes drop the row; survivors are rewritten into
-    the affected buckets (zstd parquet, ``_bucket=K`` layout); unaffected
-    buckets carry forward by reference;
+5.  winning deletes become tombstones (``lww.scrub``: payload nulled, key
+    and full order key kept); the winners go through
+    ``SnapshotTable.write_buckets`` — the one physical bucket write shared
+    with ``delete_where`` and maintenance — as the affected buckets' new
+    base files (cow) or as delta files (mor); unaffected buckets carry
+    forward by reference;
 6.  atomic, epoch-fenced manifest commit (idempotent under re-delivery);
 7.  per-bucket/file lineage + per-epoch throughput metrics from parquet
     footers (no extra Spark job).
@@ -42,14 +45,12 @@ partitioned write (round 3; previously a dedicated stats job added a
 second full scan + a collect barrier per epoch). Copy-on-write keeps the
 pre-pass because it must know the affected buckets before reading their
 stored rows. The target table is never scanned beyond affected buckets;
-all logic is JVM-side; the write routes each bucket wholly to one task
-(4x-spread hash partitioning — see step 5) with ``partitionBy`` splitting
-bucket directories.
+all logic is JVM-side; the write routes each bucket wholly to one task,
+spread over 4x as many partitions as buckets (step 5 in ``merge_batch``).
 """
 
 from __future__ import annotations
 
-import os
 import time
 from typing import Any, Callable
 
@@ -59,7 +60,7 @@ from pyspark.sql.types import StructField, StructType
 
 from . import lww
 from .lineage import MetricsTable, shuffle_totals
-from .table import BUCKET_COL, TOMBSTONE_COL, SnapshotTable, bucket_expr
+from .table import BUCKET_COL, TOMBSTONE_COL, SnapshotTable, bucket_expr, retry_on_conflict
 
 VALID_OPS = ("insert", "update", "delete")
 # the only accepted ``resolve`` / ``write_mode`` values (IngestJob checks
@@ -70,24 +71,16 @@ _STORED = "__stored__"
 SHA_COL = "content_sha256"
 
 
-def _list_written_files(data_dir: str) -> dict[int, list[str]]:
-    """Enumerate ``data_dir/_bucket=K/*.parquet`` after a partitioned write."""
-    out: dict[int, list[str]] = {}
-    if not os.path.isdir(data_dir):
-        return out
-    for entry in os.listdir(data_dir):
-        if not entry.startswith(f"{BUCKET_COL}="):
-            continue
-        b = int(entry.split("=", 1)[1])
-        bdir = os.path.join(data_dir, entry)
-        files = [
-            os.path.join(bdir, f)
-            for f in os.listdir(bdir)
-            if f.endswith(".parquet") or f.endswith(".zstd.parquet")
-        ]
-        if files:
-            out[b] = sorted(files)
-    return out
+def bucket_counts(rows: DataFrame, table: SnapshotTable) -> dict[int, int]:
+    """``{bucket: row count}`` of ``rows`` under the table's bucket spec —
+    the affected-bucket probe of every rewrite (one O(num_buckets) collect)."""
+    hit = (
+        rows.select(bucket_expr(table.key_cols, table.num_buckets).alias(BUCKET_COL))
+        .groupBy(BUCKET_COL)
+        .count()
+        .collect()
+    )
+    return {r[BUCKET_COL]: r["count"] for r in hit}
 
 
 def _evolved_schema(table: SnapshotTable, batch: DataFrame) -> tuple[StructType, list[str]]:
@@ -208,21 +201,17 @@ def merge_batch(
     t_stats0 = time.monotonic()
     nb = table.num_buckets
     mor = write_mode == "mor"
-    obs = None
+    epoch_stats = [
+        F.count(F.lit(1)).alias("n"),
+        F.min(order_col).alias("lo"),
+        F.max(order_col).alias("hi"),
+        F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("dels"),
+    ]
     affected: list[int] | None = None
     n_events = n_deletes = 0
     src_lo = src_hi = None
     if not mor:
-        bstats = (
-            ev.groupBy(bucket_expr(key_cols, nb).alias(BUCKET_COL))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min(order_col).alias("lo"),
-                F.max(order_col).alias("hi"),
-                F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("dels"),
-            )
-            .collect()
-        )
+        bstats = ev.groupBy(bucket_expr(key_cols, nb).alias(BUCKET_COL)).agg(*epoch_stats).collect()
         affected = sorted(r[BUCKET_COL] for r in bstats)
         n_events = sum(r["n"] for r in bstats)
         n_deletes = sum(r["dels"] for r in bstats)
@@ -236,17 +225,16 @@ def merge_batch(
         "new_columns": new_cols,
     }
 
-    if not mor:
-        summary.update(events=n_events, deletes=n_deletes, affected_buckets=len(affected))
-        if n_events == 0:
-            # still commit the fence so re-delivery of an empty epoch is a no-op
-            snap = table.commit(
-                {}, [], fence=fence, summary={**summary, "operation": "noop"}, branch=branch
-            )
-            summary["snapshot_id"] = None if snap is None else snap["snapshot_id"]
-            summary["skipped"] = snap is None
-            summary["timings"] = timings
-            return summary
+    def commit_empty_epoch() -> dict[str, Any]:
+        # still commit the fence so re-delivery of an empty epoch is a no-op
+        summary.update(events=0, deletes=0, affected_buckets=0)
+        snap = table.commit({}, [], fence=fence, summary={**summary, "operation": "noop"}, branch=branch)
+        summary.update(snapshot_id=None if snap is None else snap["snapshot_id"], skipped=snap is None)
+        summary["timings"] = timings
+        return summary
+
+    if not mor and n_events == 0:
+        return commit_empty_epoch()
 
     # -- 4. LWW resolve ------------------------------------------------------
     # cow: resolve over (batch ∪ affected stored rows); the stored side
@@ -260,14 +248,7 @@ def merge_batch(
         from pyspark.sql import Observation
 
         obs = Observation(f"epoch_stats_{fence}")
-        ev_aligned = ev_aligned.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.min(order_col).alias("lo"),
-            F.max(order_col).alias("hi"),
-            F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("dels"),
-        )
-    if mor:
+        ev_aligned = ev_aligned.observe(obs, *epoch_stats)
         unioned = ev_aligned
     else:
         # read-planning bucket (round-6 verdict #2): driver-side cost of
@@ -312,7 +293,7 @@ def merge_batch(
         resolved = lww.resolve(unioned, key_cols, order_col, deleted=is_del)
 
     # winners: stored rows keep their sha; winning deletes become tombstones
-    # (payload nulled — only key + lsn are retained); new upserts get
+    # (payload nulled — only key + order key are retained); new upserts get
     # sha2(content) computed JVM-side.
     final = resolved.withColumn(TOMBSTONE_COL, is_del)
     if SHA_COL in all_cols:
@@ -324,42 +305,19 @@ def merge_batch(
             .when(F.col("op") == _STORED, F.col(SHA_COL))
             .otherwise(F.sha2(F.col("content"), 256) if "content" in all_cols else F.lit(None).cast("string")),
         )
-    # Tombstones must retain their FULL ordering key (lsn AND the commit
-    # tiebreak): nulling 'commit' would let a future distinct event with the
-    # same lsn and any non-null commit beat the tombstone and resurrect the
-    # key, contradicting the (lsn, commit) total order.
-    keep = {*key_cols, *lww.order_cols(order_col, all_cols), TOMBSTONE_COL, SHA_COL}
-    payload_cols = [c for c in all_cols if c not in keep]
-    for c in payload_cols:
-        f = schema[c]
-        final = final.withColumn(c, F.when(is_del, F.lit(None).cast(f.dataType)).otherwise(F.col(c)))
-    final = final.drop("op").withColumn(BUCKET_COL, bucket_expr(key_cols, nb))
+    final = lww.scrub(final, is_del, schema, key_cols, order_col, keep=(TOMBSTONE_COL, SHA_COL)).drop("op")
 
-    # -- 5. copy-on-write: rewrite affected buckets ---------------------------
-    # Bucket-aligned write distribution (Iceberg's hash mode): route each
-    # bucket to exactly ONE task so an epoch writes ONE file per affected
-    # bucket. Without this, every shuffle partition writes a sliver into
-    # every bucket directory (tasks x buckets tiny files) and subsequent
-    # epochs drown in file-open overhead. The partition count is 4x the
-    # bucket count (empty partitions are free): hashing B distinct bucket
-    # values into exactly B partitions is balls-in-bins — ~1/e of the
-    # partitions land empty while others carry 3-4 buckets, and at high
-    # core counts the multi-bucket stragglers gate the stage (measured
-    # round 3). Each bucket still maps wholly to ONE partition, so the
-    # one-file-per-bucket invariant holds. Parallelism remains bounded by
-    # #affected buckets — size num_buckets >= cluster cores at scale.
+    # -- 5. write the affected buckets (cow) / their deltas (mor) -------------
+    # Spread: 4x the buckets (mor learns which buckets it touched only from
+    # the write, so it spreads over all of them). B buckets hashed into
+    # exactly B partitions leave ~1/e of them empty while others carry 3-4
+    # buckets, and at high core counts the multi-bucket stragglers gate the
+    # stage (measured round 3). Parallelism stays bounded by #affected
+    # buckets — size num_buckets >= cluster cores at scale.
     hook("pre_write")
     t_w0 = time.monotonic()
-    data_dir = table.new_data_dir()
-    n_parts = 4 * nb if mor else max(4 * len(affected), 1)
-    (
-        final.repartition(n_parts, F.col(BUCKET_COL))
-        .write.partitionBy(BUCKET_COL)
-        .option("compression", "zstd")
-        .parquet(data_dir)
-    )
+    files_by_bucket = table.write_buckets(final, nb, 4 * (nb if mor else len(affected)))
     timings["resolve_write"] = round(time.monotonic() - t_w0, 2)
-    files_by_bucket = _list_written_files(data_dir)
     if mor:
         # stats observed during the write action; affected buckets from
         # the partitioned directory layout — no separate stats job ran.
@@ -367,28 +325,13 @@ def merge_batch(
         # a row on this path), and on an EMPTY plan Catalyst's
         # empty-relation propagation erases the CollectMetrics node, so
         # obs.get must not be consulted there.
-        if files_by_bucket:
-            m = obs.get
-            n_events = m["n"] or 0
-            n_deletes = m["dels"] or 0
-            src_lo, src_hi = m["lo"], m["hi"]
+        if not files_by_bucket:
+            return commit_empty_epoch()
+        m = obs.get
+        n_events, n_deletes = m["n"] or 0, m["dels"] or 0
+        src_lo, src_hi = m["lo"], m["hi"]
         affected = sorted(files_by_bucket)
-        summary.update(events=n_events, deletes=n_deletes, affected_buckets=len(affected))
-        if n_events == 0:
-            # single-pass learns the epoch was empty only AFTER the write
-            # ran; the write produced no committed-referenced files (zero
-            # rows), so drop the orphan data_dir (+_SUCCESS marker) instead
-            # of leaving one per empty epoch of a long-running stream
-            import shutil
-
-            shutil.rmtree(data_dir, ignore_errors=True)
-            snap = table.commit(
-                {}, [], fence=fence, summary={**summary, "operation": "noop"}, branch=branch
-            )
-            summary["snapshot_id"] = None if snap is None else snap["snapshot_id"]
-            summary["skipped"] = snap is None
-            summary["timings"] = timings
-            return summary
+    summary.update(events=n_events, deletes=n_deletes, affected_buckets=len(affected))
 
     # -- 6. fenced atomic commit ---------------------------------------------
     hook("pre_commit")
@@ -492,16 +435,8 @@ def delete_where(
     untouched buckets carry forward by reference. Racing writers fail the
     CAS commit and the delete recomputes from fresh state.
     """
-    from .table import CommitConflict
-
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    for attempt in range(3):
-        try:
-            return _delete_once(spark, table, pred, filters)
-        except CommitConflict:
-            if attempt == 2:
-                raise
-    raise AssertionError("unreachable")
+    return retry_on_conflict(lambda: _delete_once(spark, table, pred, filters))
 
 
 def _delete_once(spark, table, pred, filters) -> dict:
@@ -509,29 +444,18 @@ def _delete_once(spark, table, pred, filters) -> dict:
 
     table.refresh()
     read_snapshot = table.snapshot()["snapshot_id"]
-    nb = table.num_buckets
     # table.read(filters=...) re-applies the filters as a row predicate, so
     # the find scan already counts pred AND filters; conjoin the same
     # filters into the rewrite's delete condition below so both agree.
     fexpr = filters_to_expr(validate_filters(filters)) if filters else None
     if fexpr is not None:
         pred = pred & fexpr
-    live = table.read(spark, filters=filters)
-    hit = (
-        live.filter(pred)
-        .select(bucket_expr(table.key_cols, nb).alias(BUCKET_COL))
-        .groupBy(BUCKET_COL)
-        .count()
-        .collect()
-    )
-    buckets = sorted(r[BUCKET_COL] for r in hit)
-    n_deleted = sum(r["count"] for r in hit)
+    hit = bucket_counts(table.read(spark, filters=filters).filter(pred), table)
+    buckets = sorted(hit)
+    n_deleted = sum(hit.values())
     if not buckets:
         return {"buckets_rewritten": 0, "rows_deleted": 0, "snapshot_id": read_snapshot}
 
-    schema = table.schema()
-    all_cols = schema.fieldNames()
-    keep_cols = {*table.key_cols, *lww.order_cols(table.order_col, all_cols), TOMBSTONE_COL}
     # live row AND matches the predicate -> tombstone with nulled payload.
     # Materialize the flag BEFORE touching TOMBSTONE_COL: the expression
     # references _deleted, which the tombstone withColumn replaces.
@@ -542,22 +466,10 @@ def _delete_once(spark, table, pred, filters) -> dict:
     ).withColumn(
         TOMBSTONE_COL, F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)) | F.col("_to_del")
     )
-    for f in schema.fields:
-        if f.name not in keep_cols:
-            out = out.withColumn(
-                f.name,
-                F.when(F.col("_to_del"), F.lit(None).cast(f.dataType)).otherwise(F.col(f.name)),
-            )
-    out = out.drop("_to_del").withColumn(BUCKET_COL, bucket_expr(table.key_cols, nb))
-    data_dir = table.new_data_dir()
-    (
-        out.repartition(max(len(buckets), 1), F.col(BUCKET_COL))
-        .sortWithinPartitions(BUCKET_COL, *table.key_cols)
-        .write.partitionBy(BUCKET_COL)
-        .option("compression", "zstd")
-        .parquet(data_dir)
-    )
-    files_by_bucket = _list_written_files(data_dir)
+    out = lww.scrub(
+        out, F.col("_to_del"), table.schema(), table.key_cols, table.order_col, keep=(TOMBSTONE_COL,)
+    ).drop("_to_del")
+    files_by_bucket = table.write_buckets(out, table.num_buckets, len(buckets), sort=True)
     snap = table.commit(
         files_by_bucket,
         buckets,
@@ -638,17 +550,8 @@ def merge_into(
             "LWW it on its own ordering, before merging)"
         )
 
-    # bucket-prune the target read to the buckets the source keys hash
-    # into (same shape as delete_where's find scan; O(num_buckets) rows)
-    nb = table.num_buckets
-    hit = (
-        src.select(bucket_expr(key_cols, nb).alias(BUCKET_COL))
-        .groupBy(BUCKET_COL)
-        .count()
-        .collect()
-    )
-    buckets = sorted(r[BUCKET_COL] for r in hit)
-    tgt = table.read(spark, buckets=buckets).select(
+    # bucket-prune the target read to the buckets the source keys hash into
+    tgt = table.read(spark, buckets=sorted(bucket_counts(src, table))).select(
         *[F.col(k).alias(f"_t_{k}") for k in key_cols],
         *[
             F.col(f.name).alias(f"t_{f.name}")

@@ -52,7 +52,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructField, StructType
 
 from .. import lww
-from ..table import TOMBSTONE_COL, SnapshotTable
+from ..table import TOMBSTONE_COL, CommitConflict, SnapshotTable
 
 # ------------------------------------------------------------- xxhash64
 # Pure-Python XXH64 matching Spark's `xxhash64` on strings (UTF-8 bytes,
@@ -376,8 +376,9 @@ class SnapshotTableWriter(DataSourceArrowWriter):
     """
 
     def __init__(self, options: dict, table: SnapshotTable, write_schema: StructType):
-        import uuid as _uuid
-
+        # a private handle pinned to the bucket spec the tasks hash under:
+        # its commit raises CommitConflict if the table was rebucketed since
+        self.table = SnapshotTable(table.root, dict(table.meta), table.version)
         self.root = table.root
         self.key_cols = table.key_cols
         self.order_col = table.order_col
@@ -385,7 +386,7 @@ class SnapshotTableWriter(DataSourceArrowWriter):
         self.fence = options.get("fence")
         self.write_schema = write_schema
         # driver-chosen unique dir; tasks write under it, commit publishes
-        self.data_rel = os.path.join("data", f"snap-{_uuid.uuid4().hex[:12]}")
+        self.data_rel = os.path.relpath(table.new_data_dir(), table.root)
         table_schema = table.schema()
         table_types = {f.name: f.dataType for f in table_schema.fields}
         for k in [*self.key_cols, self.order_col]:
@@ -479,32 +480,27 @@ class SnapshotTableWriter(DataSourceArrowWriter):
                 continue
             for b, fs in m.files_by_bucket.items():
                 files_by_bucket.setdefault(int(b), []).extend(fs)
-        table = SnapshotTable.load(self.root)
-        if self.fence is not None and table.is_fence_committed(self.fence):
-            self.abort(messages)  # duplicate delivery: drop our files
-            return
-        if table.num_buckets != self.num_buckets:
-            # a concurrent maintenance.rebucket() landed between planning
-            # and commit: tasks hashed rows under the OLD bucket count, so
-            # appending these files would put rows in wrong buckets and
-            # the bucket-local LWW resolve would silently miss collisions.
-            # Abort (orphaned files are invisible and vacuum()-collected).
+        try:
+            snap = self.table.commit(
+                files_by_bucket,
+                sorted(files_by_bucket),
+                fence=self.fence,
+                new_schema=self.evolved_schema,
+                summary={"operation": "dsv2_append", "files": sum(len(v) for v in files_by_bucket.values())},
+                mode="append_delta",
+            )
+        except CommitConflict:
+            # an append commit conflicts only on a concurrent rebucket
             self.abort(messages)
             raise RuntimeError(
                 f"snapshot_table write aborted: table was rebucketed "
-                f"({self.num_buckets} -> {table.num_buckets} buckets) while "
+                f"({self.num_buckets} -> {self.table.num_buckets} buckets) while "
                 "this write was in flight; rows were hashed under the old "
                 "bucket spec. Retry the write — it will plan against the "
                 "new spec."
-            )
-        table.commit(
-            files_by_bucket,
-            sorted(files_by_bucket),
-            fence=self.fence,
-            new_schema=self.evolved_schema,
-            summary={"operation": "dsv2_append", "files": sum(len(v) for v in files_by_bucket.values())},
-            mode="append_delta",
-        )
+            ) from None
+        if snap is None:
+            self.abort(messages)  # duplicate delivery: drop our files
 
     def abort(self, messages) -> None:
         import shutil

@@ -35,9 +35,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -174,7 +175,24 @@ class CommitConflict(Exception):
 
     The rewrite was computed from data that no longer reflects the bucket
     (e.g. a delta appended between read and publish); re-applying it would
-    drop those rows. The caller must recompute from fresh table state."""
+    drop those rows. The caller must recompute from fresh table state.
+    Also raised for any commit whose files were hashed under a bucket count
+    the table no longer has (a concurrent rebucket)."""
+
+
+_CONFLICT_ATTEMPTS = 3
+
+
+def retry_on_conflict(op: Callable[[], dict]) -> dict:
+    """Run ``op`` — a read-rewrite-commit that reads fresh table state on
+    every call — again when its commit raises :class:`CommitConflict`; the
+    conflict of the last attempt propagates."""
+    for _ in range(_CONFLICT_ATTEMPTS - 1):
+        try:
+            return op()
+        except CommitConflict:
+            pass
+    return op()
 
 
 _MAX_COMMIT_RETRIES = 16
@@ -1124,6 +1142,47 @@ class SnapshotTable:
         d = os.path.join(self.root, "data", f"snap-{uuid.uuid4().hex[:12]}")
         return d
 
+    def write_buckets(
+        self,
+        rows: DataFrame,
+        num_buckets: int,
+        partitions: int,
+        sort: bool = False,
+        max_records_per_file: int | None = None,
+    ) -> dict[int, list[str]]:
+        """Write ``rows`` as zstd parquet under a fresh :meth:`new_data_dir`,
+        one ``_bucket=K`` directory per ``bucket_expr(key_cols, num_buckets)``
+        value, and return ``{bucket: [file paths]}`` for :meth:`commit`.
+
+        Hash-partitioning on the bucket into ``partitions`` sends each
+        bucket wholly to ONE task: one file per bucket, not one sliver per
+        task (Iceberg's hash write distribution). The caller sizes the
+        spread. ``sort`` orders each bucket's rows by key, so per-file key
+        bounds stay tight for stats.py file skipping and
+        ``max_records_per_file`` cuts a bucket into contiguous key ranges.
+        An empty write leaves no directory behind.
+        """
+        data_dir = self.new_data_dir()
+        out = rows.withColumn(BUCKET_COL, bucket_expr(self.key_cols, num_buckets)).repartition(
+            partitions, F.col(BUCKET_COL)
+        )
+        if sort:
+            out = out.sortWithinPartitions(BUCKET_COL, *self.key_cols)
+        writer = out.write.partitionBy(BUCKET_COL).option("compression", "zstd")
+        if max_records_per_file:
+            writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
+        writer.parquet(data_dir)
+        files_by_bucket: dict[int, list[str]] = {}
+        for entry in os.listdir(data_dir) if os.path.isdir(data_dir) else ():
+            if entry.startswith(f"{BUCKET_COL}="):
+                bdir = os.path.join(data_dir, entry)
+                files = sorted(os.path.join(bdir, f) for f in os.listdir(bdir) if f.endswith(".parquet"))
+                if files:
+                    files_by_bucket[int(entry.split("=", 1)[1])] = files
+        if not files_by_bucket:
+            shutil.rmtree(data_dir, ignore_errors=True)
+        return files_by_bucket
+
     def commit(
         self,
         changed_files_by_bucket: dict[int, list[str]],
@@ -1172,14 +1231,22 @@ class SnapshotTable:
         when a validated bucket differs from that snapshot, including
         changes that landed BEFORE the first CAS attempt. Without the
         parameter, validation still covers the refresh-and-retry window.
-        ``append_delta`` commits are append-only and always safe to
-        (re-)apply.
+        ``append_delta`` commits are append-only and safe to (re-)apply
+        while the bucket spec holds.
+
+        Every commit except a ``new_num_buckets`` one is taken to carry rows
+        hashed under the bucket count this handle held when ``commit`` was
+        called (callers hash with ``self.num_buckets`` after their own
+        refresh). If a concurrent rebucket changed the spec since, the
+        files would sit in the wrong buckets and the bucket-local LWW would
+        miss collisions, so the commit raises :class:`CommitConflict`.
         """
         if mode not in ("replace", "append_delta"):
             raise ValueError(f"unknown commit mode {mode!r}")
         if branch is not None and new_num_buckets is not None:
             raise ValueError("rebucketing commits must target main, not a branch")
         changed_buckets = list(changed_buckets)  # may be re-iterated on retry
+        hashed_num_buckets = self.num_buckets  # before the refresh below
         # Footer-derived per-file column bounds, computed ONCE (outside the
         # CAS retry loop — the files are immutable, their stats don't
         # change across retries). Metadata-only read: no data scan.
@@ -1214,7 +1281,7 @@ class SnapshotTable:
                     )
                 return self._commit_once(
                     changed_files_by_bucket, changed_buckets, fence, new_schema, summary, mode,
-                    new_stats, new_num_buckets, branch,
+                    new_stats, new_num_buckets, branch, hashed_num_buckets,
                 )
             except VersionConflict:
                 continue
@@ -1248,9 +1315,10 @@ class SnapshotTable:
         new_schema: StructType | None,
         summary: dict[str, Any] | None,
         mode: str,
-        new_stats: dict[str, dict[str, Any]] | None = None,
-        new_num_buckets: int | None = None,
-        branch: str | None = None,
+        new_stats: dict[str, dict[str, Any]],
+        new_num_buckets: int | None,
+        branch: str | None,
+        hashed_num_buckets: int,
     ) -> dict[str, Any] | None:
         # NOTE: caller (the retry loop) has already refreshed and validated
         # against THIS metadata state; refreshing again here would open a
@@ -1258,6 +1326,12 @@ class SnapshotTable:
         # publish is caught by the _write_version CAS.
         if fence is not None and self.is_fence_committed(fence, branch=branch):
             return None
+        if new_num_buckets is None and hashed_num_buckets != self.meta["num_buckets"]:
+            raise CommitConflict(
+                f"table was rebucketed ({hashed_num_buckets} -> {self.meta['num_buckets']} "
+                "buckets) under this commit; its rows were hashed under the old spec "
+                "— recompute and retry"
+            )
 
         schema_id = self.meta["current_schema_id"]
         if new_schema is not None:

@@ -23,8 +23,7 @@ BANNED = [
 # .collect() is allowed ONLY for O(#buckets)/O(#files)/O(model) metadata,
 # never data rows
 COLLECT_ALLOWED = {
-    "merge.py",  # bucket-stat rows (<= num_buckets)
-    "maintenance.py",  # purgeable-bucket rows (<= num_buckets)
+    "merge.py",  # bucket-stat / bucket-count probe rows (<= num_buckets)
     # trained IVF centroids (K rows — the model), and round 7's
     # cosine_topk query matrix (O(#queries) — the exact driver footprint
     # the former F.broadcast of the query side already implied)
@@ -84,4 +83,18 @@ def test_lww_rule_only_in_lww_module():
         for rx, why in LWW_COPIES:
             if rx.search(src):
                 problems.append(f"{path}: {why}")
+    assert not problems, problems
+
+
+# The physical bucket write (bucket column, hash spread, zstd partitionBy,
+# file listing) lives in SnapshotTable.write_buckets only; every rewrite
+# path calls it, so no engine file but table.py may partition by bucket.
+def test_bucket_write_only_in_table_module():
+    problems = []
+    for path in _engine_files():
+        if os.path.basename(path) == "table.py":
+            continue
+        with open(path) as fh:
+            if ".partitionBy(BUCKET_COL" in fh.read():
+                problems.append(path)
     assert not problems, problems

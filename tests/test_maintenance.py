@@ -3,6 +3,8 @@ VISIBLE rows while reclaiming tombstones and old files."""
 
 from __future__ import annotations
 
+import pytest
+
 from etlframwork_spark.events import (
     CDC_BASE_SCHEMA,
     EventLogSpec,
@@ -165,7 +167,7 @@ def test_rebucket_conflicts_with_concurrent_writer(spark, tmp_path):
 
     t.commit = racing_commit
     with pytest.raises(CommitConflict):
-        _rebucket_once(spark, t, 8, None)
+        _rebucket_once(spark, t, 8)
     t.commit = real_commit
     # retry loop path succeeds and keeps the concurrent epoch's rows
     from etlframwork_spark.maintenance import rebucket
@@ -176,3 +178,87 @@ def test_rebucket_conflicts_with_concurrent_writer(spark, tmp_path):
     want = oracle_digests(apply_oracle(pdf.assign(lang=None)))
     got = {(r["repo"], r["path"]): r["content_sha256"] for r in t.read(spark).collect()}
     assert got == want
+
+
+def _keyed_table(tmp_path):
+    t = SnapshotTable.create(
+        str(tmp_path / "t"), TARGET_BASE_SCHEMA, key_cols=["repo", "path"],
+        order_col="lsn", num_buckets=4,
+    )
+    keys = [(f"r{i % 7}", f"f{i}.py") for i in range(40)]
+    return t, keys
+
+
+def test_mor_epoch_conflicts_with_concurrent_rebucket(spark, tmp_path):
+    """A merge-on-read epoch hashes its rows under the bucket count it read
+    at the start. Appending them after a concurrent rebucket would file
+    them in the wrong buckets, where the bucket-local LWW misses the keys'
+    older rows (stale duplicates on read). The commit must fail instead,
+    and the re-run epoch must land cleanly."""
+    from etlframwork_spark.maintenance import rebucket
+    from etlframwork_spark.table import CommitConflict
+
+    t, keys = _keyed_table(tmp_path)
+    ins = [("insert", i + 1, r, p, f"c{i}", f"v0-{i}") for i, (r, p) in enumerate(keys)]
+    merge_batch(spark, t, spark.createDataFrame(ins, schema=CDC_BASE_SCHEMA),
+                job_id="j", epoch_id=0, write_mode="mor")
+    upd = [("update", 100 + i, r, p, f"d{i}", f"v1-{i}") for i, (r, p) in enumerate(keys)]
+    epoch1 = spark.createDataFrame(upd, schema=CDC_BASE_SCHEMA)
+
+    def rebucket_elsewhere(stage):
+        if stage == "pre_commit":
+            rebucket(spark, SnapshotTable.load(t.root), 8)
+
+    with pytest.raises(CommitConflict):
+        merge_batch(spark, t, epoch1, job_id="j", epoch_id=1, write_mode="mor",
+                    fault_injector=rebucket_elsewhere)
+    rows = SnapshotTable.load(t.root).read(spark).collect()
+    assert sorted((r["repo"], r["path"]) for r in rows) == sorted(keys)
+    assert {r["content"] for r in rows} == {f"v0-{i}" for i in range(40)}
+
+    merge_batch(spark, SnapshotTable.load(t.root), epoch1, job_id="j", epoch_id=1, write_mode="mor")
+    rows = SnapshotTable.load(t.root).read(spark).collect()
+    assert sorted((r["repo"], r["path"]) for r in rows) == sorted(keys)
+    assert {r["content"] for r in rows} == {f"v1-{i}" for i in range(40)}
+
+
+@pytest.mark.parametrize("op", ["delete_where", "purge_tombstones", "compact_buckets", "rebucket"])
+def test_rewrite_recomputes_after_concurrent_append(spark, tmp_path, op):
+    """Every bucket rewrite shares one conflict retry: a merge-on-read epoch
+    landing between the rewrite's read and its commit fails the first
+    commit, the rewrite recomputes from fresh state, and the epoch's rows
+    survive."""
+    from etlframwork_spark import maintenance
+    from etlframwork_spark.merge import delete_where
+
+    t, keys = _keyed_table(tmp_path)
+    base = [("insert", i + 1, r, p, f"c{i}", f"v{i}") for i, (r, p) in enumerate(keys)]
+    merge_batch(spark, t, spark.createDataFrame(base, schema=CDC_BASE_SCHEMA), job_id="j", epoch_id=0)
+    # tombstone deltas for half the keys: work for compaction and purge
+    dels = [("delete", 100 + i, r, p, f"x{i}", None) for i, (r, p) in enumerate(keys[:20])]
+    merge_batch(spark, t, spark.createDataFrame(dels, schema=CDC_BASE_SCHEMA),
+                job_id="j", epoch_id=1, write_mode="mor")
+    racing = [("insert", 1000 + i, f"n{i % 5}", f"g{i}.py", f"e{i}", f"new{i}") for i in range(40)]
+    run = {
+        "delete_where": lambda: delete_where(spark, t, "content = 'v30'"),
+        "purge_tombstones": lambda: maintenance.purge_tombstones(spark, t, watermark_lsn=1000),
+        "compact_buckets": lambda: maintenance.compact_buckets(spark, t),
+        "rebucket": lambda: maintenance.rebucket(spark, t, 8),
+    }[op]
+
+    real_commit = t.commit
+    calls = []
+
+    def racing_commit(*a, **kw):
+        calls.append(kw.get("summary", {}).get("operation"))
+        if len(calls) == 1:
+            merge_batch(spark, SnapshotTable.load(t.root),
+                        spark.createDataFrame(racing, schema=CDC_BASE_SCHEMA),
+                        job_id="race", epoch_id=0, write_mode="mor")
+        return real_commit(*a, **kw)
+
+    t.commit = racing_commit
+    assert isinstance(run(), dict)
+    assert len(calls) == 2, calls
+    got = {(r["repo"], r["path"]): r["content"] for r in SnapshotTable.load(t.root).read(spark).collect()}
+    assert all(got.get((f"n{i % 5}", f"g{i}.py")) == f"new{i}" for i in range(40))
